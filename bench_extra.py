@@ -29,20 +29,11 @@ import time
 REPO = pathlib.Path(__file__).resolve().parent
 sys.path.insert(0, str(REPO))
 
+from bench import HEADLINE  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", min(os.cpu_count() or 8, 32)))
 REPS = int(os.environ.get("SPARK_GRAFT_XBENCH_REPS", "3"))
-
-HEADLINE = [
-    "agg_hash", "join_inner_hash", "join_broadcast", "join_asof", "win_rank",
-    "win_tumbling", "topk_per_group", "doc_fingerprint", "text_quality",
-    "dedup_minhash_lsh", "dedup_cluster_keeper", "ann_cosine_topk",
-    "conv_merge_runs", "ann_quantized_topk", "pipeline_e2e",
-    "events_sessionize", "search_bm25_topk", "dedup_substring_windows",
-    "dedup_substring_windows_rk", "ann_pq_sampled_topk", "join_range_binned",
-    "graph_pagerank_topk", "curation_lm_rarity", "conv_tool_chains",
-    "extract_flagship",
-]
 
 
 def _noop(df) -> None:

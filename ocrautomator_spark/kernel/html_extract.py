@@ -44,9 +44,6 @@ TABLE_STRUCTURE_TAGS = frozenset("thead tbody tfoot tr td th caption colgroup co
 VOID_TAGS = frozenset("br img hr input meta link area base col embed source track wbr".split())
 HEADING_TAGS = frozenset("h1 h2 h3 h4 h5 h6 title".split())
 
-_TOKEN = re.compile(r"<!--.*?(?:-->|$)|<!\[CDATA\[.*?(?:\]\]>|$)|<[^>]*>|[^<]+", re.S)
-_TAG_NAME = re.compile(r"</?\s*([a-zA-Z][a-zA-Z0-9-]*)")
-_WS_ANY = re.compile(r"\s+")
 # Single-pass tokenizer regex (kept as the REFERENCE tokenization the r7
 # split-based loop must reproduce, and used by A/B tests): group 1 captures
 # a well-formed tag's name, group 2 a text run; the named-tag alternative
@@ -102,8 +99,12 @@ _RUN_MEMO_CAP = 200_000
 # 38% of all blocks), and (lead, trail, n_chars, n_words) are pure functions
 # of the joined text — strip/find/split run once per DISTINCT text, repeats
 # pay one dict hit. None marks a whitespace-only text (block dropped).
+# Only texts of at most _BLK_MEMO_MAX_CHARS are kept, so the entry cap also
+# bounds bytes: the repeats are short labels, while long paragraphs are
+# almost never repeated and would pin memory on all-distinct input.
 _BLK_MEMO: dict[str, tuple[int, int, int, int] | None] = {}
 _BLK_MEMO_CAP = 200_000
+_BLK_MEMO_MAX_CHARS = 256
 _BLK_MISS = object()  # memo-miss sentinel (None is a valid memo value)
 
 
@@ -152,9 +153,10 @@ def segment_html(raw: str) -> list[Block]:
                 info = (lead, len(text) - lead - n_chars, n_chars, len(stripped.split()))
             else:
                 info = None
-            if len(_BLK_MEMO) >= _BLK_MEMO_CAP:
-                _BLK_MEMO.clear()
-            _BLK_MEMO[text] = info
+            if len(text) <= _BLK_MEMO_MAX_CHARS:
+                if len(_BLK_MEMO) >= _BLK_MEMO_CAP:
+                    _BLK_MEMO.clear()
+                _BLK_MEMO[text] = info
         if info is not None:
             lead, trail, n_chars, n_words = info
             start = first_start
@@ -300,7 +302,7 @@ def segment_html(raw: str) -> list[Block]:
                 text = run_memo_get(tok)
                 if text is None:
                     text = _html.unescape(tok) if "&" in tok else tok
-                    # C-level equivalent of _WS_ANY.sub(" ", text): collapse
+                    # C-level equivalent of re.sub(r"\s+", " ", text): collapse
                     # all (unicode) whitespace runs to single spaces,
                     # preserving one-space boundaries at the ends
                     mid = " ".join(text.split())

@@ -46,6 +46,9 @@ class Block:
     source region in the raw payload; scoring fields are filled by E4–E6.
     """
 
+    # Field order is load-bearing: the kernel builds blocks positionally
+    # (html_extract.segment_html, markup.py, pdf_reflow.py), so reordering or
+    # inserting a field silently shifts values into the wrong slots.
     text: str
     start: int
     end: int

@@ -1,7 +1,8 @@
 """Driver-checked operator surface (SURVEY.md §2B + training-data pipeline ops).
 
-Each module contributes QUERIES (name → fn(spark, sf_dir) → DataFrame) and
-ORACLES (name → ANSI SQL for DuckDB over the same parquet views). Names are
+Each family module registers its queries through ``common.q`` into the one
+QUERIES (name → fn(spark, sf_dir) → DataFrame) and ORACLES (name → ANSI SQL
+for DuckDB over the same parquet views) re-exported here. Names are
 aligned column-for-column: every computed column is aliased identically on
 both sides because the driver's compare hashes values after sorting columns
 by name.
@@ -15,36 +16,21 @@ to string on both sides.
 
 from __future__ import annotations
 
-from ocrautomator_spark.queries import (
-    conversation_q,
-    corpus_ops,
-    curation,
-    events_analytics,
-    extraction,
-    graph,
-    pipeline_ops,
+# Importing a family module registers its queries; this import order is the
+# registry's iteration order.
+from ocrautomator_spark.queries import (  # noqa: F401, I001
     relational,
     relational2,
+    graph,
     scalars,
-    scale_demo,
-    udfs,
     windows,
+    udfs,
+    pipeline_ops,
+    extraction,
+    conversation_q,
+    curation,
+    events_analytics,
+    corpus_ops,
+    scale_demo,
 )
-
-_MODULES = [
-    relational,
-    relational2,
-    graph,
-    scalars,
-    windows,
-    udfs,
-    pipeline_ops,
-    extraction,
-    conversation_q,
-    curation,
-    events_analytics,
-    corpus_ops,
-    scale_demo,
-]
-QUERIES = {k: v for m in _MODULES for k, v in m.QUERIES.items()}
-ORACLES = {k: v for m in _MODULES for k, v in m.ORACLES.items()}
+from ocrautomator_spark.queries.common import ORACLES, QUERIES  # noqa: F401

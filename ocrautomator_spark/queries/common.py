@@ -1,9 +1,27 @@
-"""Shared helpers for the query surface."""
+"""Shared helpers for the query surface, and its one registry."""
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+QUERIES = {}
+ORACLES = {}
+
+
+def q(name: str, oracle: str | None = None):
+    """Register ``fn(spark, sf_dir) -> DataFrame`` as query ``name``, with
+    its DuckDB oracle SQL when it has one. A name is registered once."""
+
+    def deco(fn):
+        if name in QUERIES:
+            raise ValueError(f"query {name!r} is already registered")
+        QUERIES[name] = fn
+        if oracle is not None:
+            ORACLES[name] = oracle
+        return fn
+
+    return deco
 
 
 def T(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -36,11 +54,6 @@ def par_scan(df: DataFrame) -> DataFrame:
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
-
-
-def T_par(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """``T`` with the ``par_scan`` guard applied."""
-    return par_scan(T(spark, sf_dir, name))
 
 
 def dsum(col: Column | str) -> Column:

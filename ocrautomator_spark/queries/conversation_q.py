@@ -19,22 +19,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ocrautomator_spark.queries.common import q
 from ocrautomator_spark.spark import conversation as conv
 from ocrautomator_spark.streaming import jobs as sj
-
-QUERIES = {}
-ORACLES = {}
-
-
-def q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
 
 # events → transcripts shape; roles chosen so consecutive same-role runs
 # exist (click/view both map to 'user'), which makes the run-merge non-trivial

@@ -17,26 +17,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ocrautomator_spark.queries.common import T
+from ocrautomator_spark.queries.common import T, q
 from ocrautomator_spark.queries.pipeline_ops import (
     _CC_EDGES_SQL,
     _cc_min_label,
     dedup_ngram_jaccard,
 )
-
-QUERIES = {}
-ORACLES = {}
-
-
-def q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
 
 # --------------------------------------------------- incremental dedup
 

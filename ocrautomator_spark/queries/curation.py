@@ -28,22 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ocrautomator_spark.queries.common import T
+from ocrautomator_spark.queries.common import T, q
 from ocrautomator_spark.queries.pipeline_ops import _word_ngrams
-
-QUERIES = {}
-ORACLES = {}
-
-
-def q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
 
 # ------------------------------------------------------- decontamination
 

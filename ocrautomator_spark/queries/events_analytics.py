@@ -20,21 +20,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ocrautomator_spark.queries.common import q
 from ocrautomator_spark.streaming import jobs as sj
-
-QUERIES = {}
-ORACLES = {}
-
-
-def q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
 
 # Session gap threshold: 8 h in microseconds. The synthetic corpus has a
 # ~7.3 h median inter-event gap per user, so this splits real islands

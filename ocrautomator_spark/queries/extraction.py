@@ -16,20 +16,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ocrautomator_spark.kernel.extractor import EXTRACTOR_VERSION
+from ocrautomator_spark.queries.common import q
 from ocrautomator_spark.spark.extract_job import documents_as_transcripts, flagship, run_extract
-
-QUERIES = {}
-ORACLES = {}
-
-
-def q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
 
 
 @q(
@@ -144,10 +132,9 @@ def pipeline_e2e(spark: SparkSession, sf: str) -> DataFrame:
 def streaming_extract(spark: SparkSession, sf: str) -> DataFrame:
     """Continuous extraction: documents arrive as files on a readStream, flow
     through the SAME salted-repartition → mapInArrow kernel spine micro-batch
-    by micro-batch (streaming/extract_stream.py), and append to the sink.
-    Hash-oracled via the plain-text identity — a REAL Structured Streaming
-    execution gated on exact equality with batch SQL."""
-    from ocrautomator_spark.streaming.extract_stream import extract_stream
+    by micro-batch (``run_extract`` on a streaming frame), and append to the
+    sink. Hash-oracled via the plain-text identity — a REAL Structured
+    Streaming execution gated on exact equality with batch SQL."""
     from ocrautomator_spark.streaming.jobs import run_to_memory
 
     d = _symlink_dir(sf, ["documents.parquet"])
@@ -160,7 +147,7 @@ def streaming_extract(spark: SparkSession, sf: str) -> DataFrame:
         F.lit(None).cast("string").alias("tool"),
         F.lit("2025-01-01 00:00:00").cast("timestamp").alias("ts"),
     )
-    ext = extract_stream(tdf)
+    ext = run_extract(tdf)
     return run_to_memory(
         ext,
         "append",

@@ -14,7 +14,9 @@ suppkey*2+1 odd), symmetrized so every node has out-edges (no dangling-mass
 term needed). At 100 TB the per-iteration shape is one shuffle on src (edge
 |x| rank join) + one shuffle on dst (contribution aggregate) — the same
 partition-by-vertex pattern Pregel/GraphX use; AQE handles hub-vertex skew
-by splitting oversized reduce partitions.
+by splitting oversized reduce partitions. The exception is the outdeg window
+over src: it buffers all of a hub vertex's edges in one task, and AQE cannot
+split a window exchange.
 """
 
 from __future__ import annotations
@@ -22,21 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ocrautomator_spark.queries.common import T
-
-QUERIES = {}
-ORACLES = {}
-
-
-def q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
+from ocrautomator_spark.queries.common import T, q
 
 _DAMP = 0.85
 _PR_TOPK = 50

@@ -23,21 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
-from ocrautomator_spark.queries.common import T, par_scan
-
-QUERIES = {}
-ORACLES = {}
-
-
-def q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
+from ocrautomator_spark.queries.common import T, par_scan, q
 
 # ------------------------------------------------------------------ dedup
 
@@ -124,9 +110,10 @@ def _word_ngrams(df: DataFrame, n: int) -> DataFrame:
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf: str) -> DataFrame:
     """Exact 3-gram Jaccard near-dup pairs via shared-gram candidate join."""
-    # (r7: T_par measured 1.85s -> 2.99s here — the round-robin exchange
-    # disturbs the downstream join layout for more than the scan-fused
-    # split+explode is worth; contrast the md5-heavy substring scans)
+    # (r7: par_scan on the documents scan measured 1.85s -> 2.99s here — the
+    # round-robin exchange disturbs the downstream join layout for more than
+    # the scan-fused split+explode is worth; contrast the md5-heavy
+    # substring scans)
     g = _word_ngrams(T(spark, sf, "documents").select("doc_id", "text"), 3)
     keep = g.groupBy("gram").agg(F.count("*").alias("df")).filter(F.col("df") <= MAX_DF).select("gram")
     gk = g.join(keep, "gram")
@@ -393,7 +380,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf: str) -> DataFrame:
     # drops the full (doc_id, gram) pre-shuffle: grams flow from the scan
     # straight into the map-side partial of the K min-aggregates, and the
     # only exchange left is the tiny per-doc signature merge (guide §2.3/2.4
-    # "aggregate before you shuffle"). Plain T, not T_par: the 2x2 variant
+    # "aggregate before you shuffle"). Plain T, no par_scan: the 2x2 variant
     # A/B measured the extra round-robin exchange as a net loss here.
     g = _split_words(T(spark, sf, "documents")).select(
         "doc_id", F.explode(_gram_array(3, F.col("words"))).alias("gram")

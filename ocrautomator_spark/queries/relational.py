@@ -11,21 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ocrautomator_spark.queries.common import T, davg, davg_sql, dsum, dsum_sql, par_scan
-
-QUERIES = {}
-ORACLES = {}
-
-
-def q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
+from ocrautomator_spark.queries.common import T, davg, davg_sql, dsum, dsum_sql, par_scan, q
 
 # ---------------------------------------------------------------- scans
 
@@ -73,7 +59,7 @@ def filter_pred(spark: SparkSession, sf: str) -> DataFrame:
 def join_inner_hash(spark: SparkSession, sf: str) -> DataFrame:
     # fact⋈dim equi-join; at 100 TB this is a shuffled hash/SMJ on the key —
     # here customer is small enough that AQE may pick broadcast, equally fine
-    # no T_par here (r7, measured): the broadcast-join probe + count/sum agg
+    # no par_scan here (r7, measured): the broadcast-join probe + count/sum agg
     # is ~one hash probe per row — cheaper than the repartition that would
     # parallelize it (A/B 0.42s -> 0.46s). Contrast agg_hash, whose 8
     # decimal aggregates per row DO pay for the spread.
@@ -95,7 +81,7 @@ def join_inner_hash(spark: SparkSession, sf: str) -> DataFrame:
 )
 def join_broadcast(spark: SparkSession, sf: str) -> DataFrame:
     # explicit broadcast: part is a dim table; never shuffle the fact side
-    # no T_par (r7, measured 0.85s -> 1.15s): shuffling the 600k-row probe
+    # no par_scan (r7, measured 0.85s -> 1.15s): shuffling the 600k-row probe
     # side costs more than the one-core broadcast probe + light agg it spreads
     li, p = T(spark, sf, "lineitem"), T(spark, sf, "part")
     return (

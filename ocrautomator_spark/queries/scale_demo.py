@@ -12,20 +12,7 @@ import hashlib
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ocrautomator_spark.queries.common import T, dsum, dsum_sql
-
-QUERIES = {}
-ORACLES = {}
-
-
-def q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+from ocrautomator_spark.queries.common import T, dsum, dsum_sql, q
 
 
 def _sfx(sf: str, src: str = "orders") -> str:

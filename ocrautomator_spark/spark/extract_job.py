@@ -115,14 +115,15 @@ def _output_schema(df: DataFrame, passthrough: list[str]) -> StructType:
 def run_extract(
     df: DataFrame,
     n_partitions: int | None = None,
-    salt_buckets: int = SALT_BUCKETS,
     passthrough: list[str] | None = None,
-    observe: bool = False,
 ) -> DataFrame:
     """Transcripts-shaped df → extracted df. Lazy; caller triggers the action.
 
     ``passthrough`` columns (beyond the TRANSCRIPTS six) are carried through
     the Python stage unchanged (zero-copy Arrow) and appended to the output.
+    A streaming ``df`` (readStream) gets the same plan minus the per-partition
+    sort, which Spark refuses on a stream: ordering an unbounded stream is the
+    sink's concern.
     """
     passthrough = passthrough or []
     schema = _output_schema(df, passthrough)
@@ -133,22 +134,13 @@ def run_extract(
     n = n_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     # ONE repartition for the whole job (SURVEY.md §4): hash of
     # (conv_id, turn_idx mod salt) spreads hot conversations over salt buckets
-    salted = df.repartition(n, F.col("conv_id"), F.pmod(F.col("turn_idx"), F.lit(salt_buckets)))
+    parts = df.repartition(n, F.col("conv_id"), F.pmod(F.col("turn_idx"), F.lit(SALT_BUCKETS)))
     # stable (conv_id, turn_idx) ordering is established BEFORE the Python
     # stage: sorting 6 narrow input columns is far cheaper than sorting the
     # wide extracted rows, and mapInArrow preserves intra-partition row order
-    ordered = salted.sortWithinPartitions("conv_id", "turn_idx")
-    ext = ordered.mapInArrow(extract_batches, schema=schema)
-    if observe:
-        ext = ext.observe(
-            "extract_stats",
-            F.count(F.lit(1)).alias("rows"),
-            F.sum("n_chars_in").alias("chars_in"),
-            F.sum("n_chars_out").alias("chars_out"),
-            F.avg("batch_latency_ms").alias("avg_batch_latency_ms"),
-            F.sum(F.when(F.col("payload_kind") == "error", 1).otherwise(0)).alias("errors"),
-        )
-    return ext
+    if not df.isStreaming:
+        parts = parts.sortWithinPartitions("conv_id", "turn_idx")
+    return parts.mapInArrow(extract_batches, schema=schema)
 
 
 def documents_as_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:

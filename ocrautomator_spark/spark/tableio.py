@@ -1,18 +1,12 @@
 """TableIO — the storage seam (SURVEY.md §0 'Iceberg gap', §7 M3).
 
-The north_rule targets Iceberg tables; this sandbox has no Iceberg runtime
-jars and no network. All checkpoint/resume logic is therefore written against
-a small interface with two backends:
-
-* ``IcebergIO`` — the real-cluster backend. Config-only here: documents the
-  exact calls (``df.writeTo(table).append()``; restart from the last committed
-  snapshot via the ``snapshots`` metadata table) and raises cleanly if the
-  Iceberg catalog isn't on the classpath.
-* ``ParquetManifestIO`` — sandbox emulation of snapshot/manifest semantics:
-  each committed chunk is a parquet directory plus an atomic JSON manifest
-  (write tmp + ``os.replace``), the moral equivalent of one Iceberg append
-  snapshot. This is the columnar rebuild of ocrAutomator's resume file
-  (SURVEY.md §2A A10): the manifest set IS the resume state.
+All checkpoint/resume logic is written against ``ParquetManifestIO``, which
+emulates Iceberg's snapshot/manifest semantics with plain parquet: each
+committed chunk is a parquet directory plus an atomic JSON manifest (write
+tmp + ``os.replace``), the moral equivalent of one Iceberg append snapshot.
+This is the columnar rebuild of ocrAutomator's resume file (SURVEY.md §2A
+A10): the manifest set IS the resume state. README.md maps each method onto
+the Iceberg call that replaces it where an Iceberg catalog is available.
 """
 
 from __future__ import annotations
@@ -321,39 +315,3 @@ class ParquetManifestIO:
             removed.append(str(d))
         return removed
 
-
-class IcebergIO:
-    """Real-cluster backend. Every method maps 1:1 onto public Iceberg calls;
-    in this sandbox (no Iceberg jars, SURVEY.md §0) construction fails fast."""
-
-    def __init__(self, spark: SparkSession, table: str) -> None:
-        self.table = table
-        try:
-            spark.sql(f"SELECT 1 FROM {table}.snapshots LIMIT 1")
-        except Exception as e:  # noqa: BLE001
-            raise RuntimeError(
-                "Iceberg catalog unavailable in this environment. On a real "
-                "cluster: spark.sql.catalog.<name>=org.apache.iceberg.spark.SparkCatalog; "
-                "then write_bucket == df.writeTo(table).append() (one snapshot per "
-                "chunk, commit metadata carries bucket+run_id via snapshot summary "
-                "properties), committed_buckets == SELECT summary['bucket'] FROM "
-                f"{table}.snapshots, and read == spark.read.table(table)."
-            ) from e
-
-    def committed_buckets(self) -> set[int]:  # pragma: no cover - cluster only
-        raise NotImplementedError
-
-    def write_bucket(self, df: DataFrame, bucket: int, run_id: str, stats=None):  # pragma: no cover
-        raise NotImplementedError
-
-    def read(self, spark: SparkSession) -> DataFrame:  # pragma: no cover
-        raise NotImplementedError
-
-    def compact_bucket(self, spark, bucket, run_id, target_files=1):  # pragma: no cover - cluster only
-        # CALL system.rewrite_data_files(table => t, where => 'bucket = b')
-        raise NotImplementedError
-
-    def gc_orphans(self):  # pragma: no cover - cluster only
-        # CALL system.expire_snapshots(table => t, older_than => ...);
-        # CALL system.remove_orphan_files(table => t)
-        raise NotImplementedError

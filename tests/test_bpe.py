@@ -10,6 +10,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from ocrautomator_spark.kernel import bpe
+from ocrautomator_spark.queries import QUERIES
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -59,8 +60,6 @@ def test_roundtrip_and_count(s):
 
 def test_token_stats_bpe_matches_kernel(spark):
     """Distributed counts == sequential kernel counts, 100%."""
-    from ocrautomator_spark.queries import pipeline_ops as po
-
     tok = bpe.default_tokenizer()
     tbl = pq.read_table(f"{SF_DIR}/documents.parquet", columns=["doc_id", "text"])
     expect = {
@@ -69,7 +68,7 @@ def test_token_stats_bpe_matches_kernel(spark):
     }
     got = {
         r["doc_id"]: r["n_bpe_true"]
-        for r in po.QUERIES["token_stats_bpe"](spark, SF_DIR).collect()
+        for r in QUERIES["token_stats_bpe"](spark, SF_DIR).collect()
     }
     assert got == expect
 
@@ -98,7 +97,7 @@ def test_pack_tokens_matches_python_reference(spark):
         cum += n
     got = {
         r["bin_id"]: (r["n_docs"], r["bin_tokens"])
-        for r in po.QUERIES["pack_contiguous_bins_tokens"](spark, SF_DIR).collect()
+        for r in QUERIES["pack_contiguous_bins_tokens"](spark, SF_DIR).collect()
     }
     assert got == {b: (nd[b], tot[b]) for b in nd}
 

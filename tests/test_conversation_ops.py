@@ -7,6 +7,7 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 
+from ocrautomator_spark.queries import QUERIES
 from ocrautomator_spark.spark.conversation import (
     conversation_stats,
     merge_consecutive_same_role,
@@ -147,10 +148,9 @@ def test_tool_chains_invariants_and_single_exchange(spark):
     import io
     import re
 
-    from ocrautomator_spark.queries.conversation_q import QUERIES as CQ
     from tests.conftest import SF_DIR
 
-    df = CQ["conv_tool_chains"](spark, SF_DIR)
+    df = QUERIES["conv_tool_chains"](spark, SF_DIR)
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")

@@ -10,12 +10,8 @@ import re
 
 from pyspark.sql import functions as F
 
-from ocrautomator_spark.queries.corpus_ops import (
-    QUERIES as OQ,
-    REPLAY_OFFSET,
-    SNAP_MAX,
-)
-from ocrautomator_spark.queries.pipeline_ops import QUERIES as PQ
+from ocrautomator_spark.queries import QUERIES
+from ocrautomator_spark.queries.corpus_ops import REPLAY_OFFSET, SNAP_MAX
 from tests.conftest import SF_DIR
 
 
@@ -29,7 +25,7 @@ def _plan(df) -> str:
 # ------------------------------------------------------- incremental dedup
 
 def test_incremental_snapshot_kill_paths_fire(spark):
-    out = OQ["dedup_incremental_snapshot"](spark, SF_DIR).collect()
+    out = QUERIES["dedup_incremental_snapshot"](spark, SF_DIR).collect()
     assert out
     # in-batch dedup: every replayed fetch lost to its lower-id original
     assert all(r["doc_id"] < REPLAY_OFFSET for r in out)
@@ -46,7 +42,7 @@ def test_incremental_snapshot_kill_paths_fire(spark):
 # ---------------------------------------------------------- keep-best
 
 def test_keep_best_is_longest_member_and_partitions_match_keeper(spark):
-    best = OQ["dedup_cluster_keep_best"](spark, SF_DIR).collect()
+    best = QUERIES["dedup_cluster_keep_best"](spark, SF_DIR).collect()
     lens = {
         r["doc_id"]: r["n_chars"]
         for r in spark.read.parquet(f"{SF_DIR}/documents.parquet")
@@ -65,7 +61,7 @@ def test_keep_best_is_longest_member_and_partitions_match_keeper(spark):
             g.setdefault(r["keeper"], set()).add(r["doc_id"])
         return set(frozenset(v) for v in g.values())
 
-    minid = PQ["dedup_cluster_keeper"](spark, SF_DIR).collect()
+    minid = QUERIES["dedup_cluster_keeper"](spark, SF_DIR).collect()
     assert parts(best) == parts(minid)
 
 
@@ -75,13 +71,13 @@ def test_bm25_single_pass_no_doc_term_shuffle(spark):
     """tf comes from array HOFs, stats from one broadcast row — the plan
     must contain no hash-partitioned exchange and must top-k via
     TakeOrderedAndProject, not a global sort."""
-    plan = _plan(OQ["search_bm25_topk"](spark, SF_DIR))
+    plan = _plan(QUERIES["search_bm25_topk"](spark, SF_DIR))
     assert "TakeOrderedAndProject" in plan
     assert not re.search(r"hashpartitioning", plan), "no (doc,term) shuffle allowed"
 
 
 def test_bm25_ranks_dense_and_matched(spark):
-    rows = OQ["search_bm25_topk"](spark, SF_DIR).collect()
+    rows = QUERIES["search_bm25_topk"](spark, SF_DIR).collect()
     assert [r["rank"] for r in sorted(rows, key=lambda r: r["rank"])] == list(
         range(1, len(rows) + 1)
     )
@@ -91,7 +87,7 @@ def test_bm25_ranks_dense_and_matched(spark):
 # ----------------------------------------------------------- skew diag
 
 def test_key_skew_conserves_rows_and_ratio(spark):
-    rows = OQ["diag_key_skew"](spark, SF_DIR).collect()
+    rows = QUERIES["diag_key_skew"](spark, SF_DIR).collect()
     total = spark.read.parquet(f"{SF_DIR}/events.parquet").count()
     assert sum(r["n_rows"] for r in rows) == total
     assert all(len(r["bucket"]) == 1 and r["bucket"] in "0123456789abcdef" for r in rows)

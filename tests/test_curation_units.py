@@ -10,10 +10,8 @@ import re
 
 from pyspark.sql import functions as F
 
-from ocrautomator_spark.queries.curation import (
-    EVAL_MOD,
-    QUERIES as CQ,
-)
+from ocrautomator_spark.queries import QUERIES
+from ocrautomator_spark.queries.curation import EVAL_MOD
 from tests.conftest import SF_DIR
 
 
@@ -29,14 +27,14 @@ def _plan(df) -> str:
 def test_repetition_stats_is_pure_narrow_map(spark):
     """All stats come from array HOFs — the plan must contain no exchange of
     any kind: scan -> project, nothing else."""
-    plan = _plan(CQ["curation_repetition_stats"](spark, SF_DIR))
+    plan = _plan(QUERIES["curation_repetition_stats"](spark, SF_DIR))
     assert "Exchange" not in plan, "repetition stats must not shuffle"
 
 
 def test_decontaminate_joins_broadcast_never_smj(spark):
     """The eval gram set is the broadcast side; the 100 TB train side must
     never sort-merge against it."""
-    plan = _plan(CQ["curation_decontaminate"](spark, SF_DIR))
+    plan = _plan(QUERIES["curation_decontaminate"](spark, SF_DIR))
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
 
@@ -45,7 +43,7 @@ def test_filter_funnel_single_scan_no_hash_exchange(spark):
     """One narrow map + one single-row agg: the only allowed exchange is the
     SinglePartition gather for the global aggregate — never a
     hashpartitioning shuffle, and only one parquet scan."""
-    plan = _plan(CQ["curation_filter_funnel"](spark, SF_DIR))
+    plan = _plan(QUERIES["curation_filter_funnel"](spark, SF_DIR))
     assert "hashpartitioning" not in plan
     # formatted explain prints each node in the tree AND the detail section
     assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1
@@ -56,7 +54,7 @@ def test_term_df_dedups_before_explode(spark):
     """(doc, term) dedup must happen map-side via array_distinct, so the plan
     has exactly one hash exchange (the groupBy(term)) and no global
     distinct shuffle on exploded pairs."""
-    plan = _plan(CQ["curation_term_df"](spark, SF_DIR))
+    plan = _plan(QUERIES["curation_term_df"](spark, SF_DIR))
     assert plan.count("Arguments: hashpartitioning") == 1
     assert "array_distinct" in plan
 
@@ -64,7 +62,7 @@ def test_term_df_dedups_before_explode(spark):
 # --------------------------------------------------------------- semantics
 
 def test_funnel_is_monotone_and_anchored(spark):
-    rows = {r["stage"]: r["n_docs"] for r in CQ["curation_filter_funnel"](spark, SF_DIR).collect()}
+    rows = {r["stage"]: r["n_docs"] for r in QUERIES["curation_filter_funnel"](spark, SF_DIR).collect()}
     stages = sorted(rows)
     assert stages[0] == "0_ingest"
     counts = [rows[s] for s in stages]
@@ -79,7 +77,7 @@ def test_decontaminate_covers_all_train_docs_and_flags_planted(spark):
     eval_text = docs.filter(F.col("doc_id") % EVAL_MOD == 0).select("text").first()["text"]
     n_train = docs.filter(F.col("doc_id") % EVAL_MOD != 0).count()
 
-    out = CQ["curation_decontaminate"](spark, SF_DIR)
+    out = QUERIES["curation_decontaminate"](spark, SF_DIR)
     assert out.count() == n_train
     assert out.select("doc_id").distinct().count() == n_train
 
@@ -125,17 +123,17 @@ def test_repetition_stats_pin_known_doc(spark):
 def test_sample_stratified_is_narrow_deterministic_and_rate_sane(spark):
     from ocrautomator_spark.queries.curation import SAMPLE_THRESHOLDS
 
-    plan = _plan(CQ["curation_sample_stratified"](spark, SF_DIR))
+    plan = _plan(QUERIES["curation_sample_stratified"](spark, SF_DIR))
     assert "Exchange" not in plan, "hash sampling must be a pure narrow filter"
 
-    a = {r["doc_id"] for r in CQ["curation_sample_stratified"](spark, SF_DIR).collect()}
-    b = {r["doc_id"] for r in CQ["curation_sample_stratified"](spark, SF_DIR).collect()}
+    a = {r["doc_id"] for r in QUERIES["curation_sample_stratified"](spark, SF_DIR).collect()}
+    b = {r["doc_id"] for r in QUERIES["curation_sample_stratified"](spark, SF_DIR).collect()}
     assert a == b and a, "hash-based sample must be reproducible"
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     # zh threshold 'ff' keeps everything in that stratum
     n_zh = docs.filter(F.col("lang") == "zh").count()
-    out = CQ["curation_sample_stratified"](spark, SF_DIR)
+    out = QUERIES["curation_sample_stratified"](spark, SF_DIR)
     assert out.filter(F.col("lang") == "zh").count() == n_zh
     # en is downsampled: strictly fewer than the stratum (25% target)
     n_en = docs.filter(F.col("lang") == "en").count()
@@ -145,7 +143,7 @@ def test_sample_stratified_is_narrow_deterministic_and_rate_sane(spark):
 
 
 def test_mix_plan_shares_sum_to_one_and_factor_inverts(spark):
-    rows = CQ["curation_mix_plan"](spark, SF_DIR).collect()
+    rows = QUERIES["curation_mix_plan"](spark, SF_DIR).collect()
     assert abs(sum(r["token_share"] for r in rows) - 1.0) < 1e-12
     n = len(rows)
     for r in rows:
@@ -153,7 +151,7 @@ def test_mix_plan_shares_sum_to_one_and_factor_inverts(spark):
 
 
 def test_term_df_hapax_dropped_and_fraction_exact(spark):
-    out = CQ["curation_term_df"](spark, SF_DIR).collect()
+    out = QUERIES["curation_term_df"](spark, SF_DIR).collect()
     assert all(r["df"] >= 2 for r in out)
     total = spark.read.parquet(f"{SF_DIR}/documents.parquet").count()
     for r in out[:20]:
@@ -163,10 +161,10 @@ def test_term_df_hapax_dropped_and_fraction_exact(spark):
 def test_pii_scrub_is_narrow_and_redacts_all_planted(spark):
     from ocrautomator_spark.queries.curation import PII_EMAIL_RE, PII_PHONE_RE
 
-    plan = _plan(CQ["curation_pii_scrub"](spark, SF_DIR))
+    plan = _plan(QUERIES["curation_pii_scrub"](spark, SF_DIR))
     assert "Exchange" not in plan, "PII scrub must be a pure narrow map"
 
-    rows = CQ["curation_pii_scrub"](spark, SF_DIR).collect()
+    rows = QUERIES["curation_pii_scrub"](spark, SF_DIR).collect()
     assert rows
     # the planting guarantees at least one of each per doc
     assert all(r["n_emails"] >= 1 and r["n_phones"] >= 1 for r in rows)
@@ -219,7 +217,7 @@ def test_importance_weights_favor_target_lang(spark):
     orig = cu.T
     try:
         cu.T = lambda s, sf, name: df
-        rows = {r["doc_id"]: r for r in cu.QUERIES["curation_importance_weights"](spark, "unused").collect()}
+        rows = {r["doc_id"]: r for r in QUERIES["curation_importance_weights"](spark, "unused").collect()}
     finally:
         cu.T = orig
     norm = {k: r["raw_score"] / r["n_terms"] for k, r in rows.items()}
@@ -236,8 +234,6 @@ def test_lm_rarity_planted_gibberish_ranks_top(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from ocrautomator_spark.queries import curation as cu
-
     tbl = pq.read_table(f"{SF_DIR}/documents.parquet")
     gib = " ".join(f"zq{i}gibx" for i in range(60))
     extra = pa.table(
@@ -251,7 +247,7 @@ def test_lm_rarity_planted_gibberish_ranks_top(spark, tmp_path):
     ).cast(tbl.schema)
     pq.write_table(pa.concat_tables([tbl, extra]), str(tmp_path / "documents.parquet"))
 
-    rows = cu.QUERIES["curation_lm_rarity"](spark, str(tmp_path)).collect()
+    rows = QUERIES["curation_lm_rarity"](spark, str(tmp_path)).collect()
     top = rows[0]
     assert top["doc_id"] == 999_999, [r["doc_id"] for r in rows[:3]]
     assert top["rare_ppm"] == 1_000_000
@@ -264,7 +260,7 @@ def test_lm_rarity_nonvacuous_and_scale_invariant_threshold(spark):
     n_rare never exceeds n_bigrams."""
     from ocrautomator_spark.queries import curation as cu
 
-    rows = cu.QUERIES["curation_lm_rarity"](spark, SF_DIR).collect()
+    rows = QUERIES["curation_lm_rarity"](spark, SF_DIR).collect()
     assert len(rows) == cu.RARITY_TOPN
     assert sum(r["n_rare"] for r in rows) > 0, "rare tail vacuously empty"
     ppms = [r["rare_ppm"] for r in rows]

@@ -10,10 +10,8 @@ import re
 
 from pyspark.sql import functions as F
 
-from ocrautomator_spark.queries.events_analytics import (
-    QUERIES as EQ,
-    SESSION_GAP_US,
-)
+from ocrautomator_spark.queries import QUERIES
+from ocrautomator_spark.queries.events_analytics import SESSION_GAP_US
 from tests.conftest import SF_DIR
 
 
@@ -35,19 +33,19 @@ def _n_exchanges(plan: str) -> int:
 def test_sessionize_single_user_exchange(spark):
     """Both windows and the session agg cluster on user_id — exactly one
     Exchange in the whole plan."""
-    plan = _plan(EQ["events_sessionize"](spark, SF_DIR))
+    plan = _plan(QUERIES["events_sessionize"](spark, SF_DIR))
     assert _n_exchanges(plan) == 1
     assert "hashpartitioning(user_id" in plan
 
 
 def test_attribution_single_user_exchange(spark):
-    plan = _plan(EQ["events_attribution_last_touch"](spark, SF_DIR))
+    plan = _plan(QUERIES["events_attribution_last_touch"](spark, SF_DIR))
     assert _n_exchanges(plan) == 1
     assert "hashpartitioning(user_id" in plan
 
 
 def test_funnel_no_cartesian(spark):
-    plan = _plan(EQ["events_funnel"](spark, SF_DIR))
+    plan = _plan(QUERIES["events_funnel"](spark, SF_DIR))
     assert "CartesianProduct" not in plan and "BroadcastNestedLoop" not in plan
 
 
@@ -56,7 +54,7 @@ def test_funnel_no_cartesian(spark):
 def test_sessionize_gap_invariants(spark):
     """Within a session the max internal gap is <= threshold; session count
     per user equals 1 + number of over-threshold gaps."""
-    out = EQ["events_sessionize"](spark, SF_DIR)
+    out = QUERIES["events_sessionize"](spark, SF_DIR)
     rows = out.collect()
     assert rows
     # session_idx is a dense 1..n per user
@@ -76,7 +74,7 @@ def test_sessionize_gap_invariants(spark):
 
 
 def test_funnel_counts_monotone_and_ordered(spark):
-    rows = {r["stage"]: r["n_users"] for r in EQ["events_funnel"](spark, SF_DIR).collect()}
+    rows = {r["stage"]: r["n_users"] for r in QUERIES["events_funnel"](spark, SF_DIR).collect()}
     assert set(rows) == {"view", "view>click", "view>click>purchase"}
     assert rows["view"] >= rows["view>click"] >= rows["view>click>purchase"] > 0
     # ordered funnel must be stricter than unordered presence-of-all-three
@@ -94,7 +92,7 @@ def test_funnel_counts_monotone_and_ordered(spark):
 def test_retention_offset_zero_covers_every_user(spark):
     """Day-0 of each cohort contains the whole cohort (the first event is at
     offset 0 by construction), and offsets are never negative."""
-    out = EQ["events_retention_cohort"](spark, SF_DIR).collect()
+    out = QUERIES["events_retention_cohort"](spark, SF_DIR).collect()
     assert all(r["day_offset"] >= 0 for r in out)
     day0 = sum(r["n_users"] for r in out if r["day_offset"] == 0)
     n_users = spark.read.parquet(f"{SF_DIR}/events.parquet").select("user_id").distinct().count()
@@ -102,7 +100,7 @@ def test_retention_offset_zero_covers_every_user(spark):
 
 
 def test_attribution_latency_positive_and_touch_precedes(spark):
-    out = EQ["events_attribution_last_touch"](spark, SF_DIR)
+    out = QUERIES["events_attribution_last_touch"](spark, SF_DIR)
     rows = out.collect()
     n_purchases = (
         spark.read.parquet(f"{SF_DIR}/events.parquet")

@@ -257,3 +257,21 @@ def test_cjk_char_level_stopword_path():
     assert stopword_ratio(zh) >= 0.3, stopword_ratio(zh)
     # and a language-neutral token soup stays below the bonus threshold
     assert stopword_ratio("alpha bravo charlie delta echo foxtrot") == 0.0
+
+
+def test_block_memo_keeps_short_texts_only():
+    """The block-text memo bounds bytes, not just entries: a long distinct
+    paragraph is not kept, a short repeated label is, and both segment the
+    same with or without the memo."""
+    from ocrautomator_spark.kernel import html_extract as hx
+
+    long_text = " ".join(f"distinctword{i}" for i in range(60))
+    assert len(long_text) > hx._BLK_MEMO_MAX_CHARS
+    short_text = "Home and About"
+    page = f"<html><body><p>{long_text}</p><div>{short_text}</div></body></html>"
+    hx._BLK_MEMO.clear()
+    first = segment_html(page)
+    assert long_text not in hx._BLK_MEMO
+    assert short_text in hx._BLK_MEMO
+    assert [b.text for b in first] == [long_text, short_text]
+    assert segment_html(page) == first

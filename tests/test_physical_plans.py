@@ -10,8 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ocrautomator_spark.queries.pipeline_ops import QUERIES as POQ
-from ocrautomator_spark.queries.relational import QUERIES as RQ
+from ocrautomator_spark.queries import QUERIES
 from ocrautomator_spark.spark.extract_job import run_extract
 from ocrautomator_spark.spark.synth_job import synth_transcripts_df
 from tests.conftest import SF_DIR
@@ -28,13 +27,13 @@ def _plan(df) -> str:
 
 
 def test_filter_pushdown_reaches_scan(spark):
-    plan = _plan(RQ["filter_pred"](spark, SF_DIR))
+    plan = _plan(QUERIES["filter_pred"](spark, SF_DIR))
     assert "PushedFilters: [" in plan
     assert "l_shipdate" in plan.split("PushedFilters:")[1][:400], "shipdate range not pushed"
 
 
 def test_column_pruning_in_read_schema(spark):
-    plan = _plan(RQ["scan_project"](spark, SF_DIR))
+    plan = _plan(QUERIES["scan_project"](spark, SF_DIR))
     read_schema = plan.split("ReadSchema:")[1].splitlines()[0]
     assert "l_orderkey" in read_schema and "l_quantity" in read_schema
     assert "l_comment" not in read_schema and "l_shipdate" not in read_schema
@@ -43,19 +42,19 @@ def test_column_pruning_in_read_schema(spark):
 
 
 def test_broadcast_join_is_broadcast(spark):
-    plan = _plan(RQ["join_broadcast"](spark, SF_DIR))
+    plan = _plan(QUERIES["join_broadcast"](spark, SF_DIR))
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
 
 
 def test_agg_has_partial_phase(spark):
-    plan = _plan(RQ["agg_hash"](spark, SF_DIR))
+    plan = _plan(QUERIES["agg_hash"](spark, SF_DIR))
     assert "HashAggregate" in plan
     assert "partial_" in plan, "map-side (partial) aggregation missing"
 
 
 def test_sort_limit_is_take_ordered(spark):
-    plan = _plan(RQ["sort_limit"](spark, SF_DIR))
+    plan = _plan(QUERIES["sort_limit"](spark, SF_DIR))
     assert "TakeOrderedAndProject" in plan, "global sort planned where top-k suffices"
 
 
@@ -76,7 +75,7 @@ def test_extract_python_stage_reads_pruned_columns(spark):
 
 
 def test_ann_topk_no_global_sort(spark):
-    plan = _plan(POQ["ann_cosine_topk"](spark, SF_DIR))
+    plan = _plan(QUERIES["ann_cosine_topk"](spark, SF_DIR))
     assert "TakeOrderedAndProject" in plan
 
 
@@ -104,7 +103,7 @@ def test_salted_repartition_balances_skew(spark):
 def test_dedup_embedding_candidates_are_equi_join(spark):
     """The candidate stage must be an equi-join on the LSH bucket — never a
     BroadcastNestedLoopJoin / cartesian on an inequality condition."""
-    plan = _plan(POQ["dedup_embedding_cosine"](spark, SF_DIR))
+    plan = _plan(QUERIES["dedup_embedding_cosine"](spark, SF_DIR))
     assert "BroadcastNestedLoopJoin" not in plan
     assert "Cartesian" not in plan
 
@@ -112,7 +111,7 @@ def test_dedup_embedding_candidates_are_equi_join(spark):
 def test_dedup_exact_shuffles_fixed_width_key(spark):
     """The dedup shuffle must carry the md5 grouping key, not the payload:
     partial aggregation collapses to (key, min, count) before the exchange."""
-    plan = _plan(POQ["dedup_exact"](spark, SF_DIR))
+    plan = _plan(QUERIES["dedup_exact"](spark, SF_DIR))
     assert "partial_" in plan, "map-side partial agg missing — shuffle would carry payloads"
     # the exchange hashes the md5 grouping expression, not the text column
     exch = plan.split("Arguments: hashpartitioning")[1].splitlines()[0]
@@ -123,10 +122,9 @@ def test_conversation_family_reuses_one_exchange(spark):
     """The events→transcripts adapter windows over the conv_id attribute
     itself, so turn numbering + downstream per-conversation windows share ONE
     hashpartitioning exchange."""
-    from ocrautomator_spark.queries.conversation_q import QUERIES as CQ
 
     for name in ("conv_turn_gaps", "conv_merge_runs", "conv_response_latency", "conv_context_window"):
-        plan = _plan(CQ[name](spark, SF_DIR))
+        plan = _plan(QUERIES[name](spark, SF_DIR))
         n = plan.count("Arguments: hashpartitioning")
         assert n == 1, f"{name}: expected 1 hash exchange, saw {n}"
 
@@ -137,7 +135,7 @@ def test_substring_dedup_plans_have_no_quadratic_join(spark):
     never a cartesian/BNLJ; and the span view must contain NO join between
     corpus-sized relations beyond the semi-join back to the kept hashes."""
     for name in ("dedup_substring_windows", "dedup_substring_spans", "dedup_substring_windows_rk", "dedup_substring_spans_rk", "dedup_substring_excise_rk"):
-        plan = _plan(POQ[name](spark, SF_DIR))
+        plan = _plan(QUERIES[name](spark, SF_DIR))
         assert "BroadcastNestedLoopJoin" not in plan, name
         assert "Cartesian" not in plan, name
 
@@ -146,7 +144,7 @@ def test_pq_adc_plan_shape(spark):
     """PQ/ADC: exactly one broadcast cross-join (the 1-row query vector —
     linear, sanctioned) and top-k via TakeOrderedAndProject, never a global
     sort of the corpus."""
-    plan = _plan(POQ["ann_pq_adc_topk"](spark, SF_DIR))
+    plan = _plan(QUERIES["ann_pq_adc_topk"](spark, SF_DIR))
     assert plan.count("BroadcastNestedLoopJoin") <= 2  # cand + re-rank stages
     assert "CartesianProduct" not in plan
     assert "TakeOrderedAndProject" in plan
@@ -155,9 +153,8 @@ def test_pq_adc_plan_shape(spark):
 def test_shuffle_shards_single_exchange(spark):
     """The deterministic corpus shuffle must cost exactly ONE exchange (the
     shard key) — a global row_number would show a singlePartition exchange."""
-    from ocrautomator_spark.queries.curation import QUERIES as CQ
 
-    plan = _plan(CQ["curation_shuffle_shards"](spark, SF_DIR))
+    plan = _plan(QUERIES["curation_shuffle_shards"](spark, SF_DIR))
     # "Exchange (" counts tree nodes once; the formatted detail section
     # repeats the name without the node id
     assert plan.count("Exchange (") == 1, plan[:600]
@@ -168,9 +165,8 @@ def test_range_join_is_binned_equi_join(spark):
     """join_range_binned must plan a hash/sort-merge EQUI-join on the bin
     key — never the BroadcastNestedLoopJoin a raw interval predicate
     produces — with the exact range re-filter applied post-join."""
-    from ocrautomator_spark.queries.relational2 import QUERIES as R2Q
 
-    plan = _plan(R2Q["join_range_binned"](spark, SF_DIR))
+    plan = _plan(QUERIES["join_range_binned"](spark, SF_DIR))
     assert "BroadcastNestedLoopJoin" not in plan
     assert "Cartesian" not in plan
     # partial aggregation before the final group-by exchange
@@ -182,9 +178,8 @@ def test_pagerank_plan_shape(spark):
     shuffles; the ONLY nested-loop allowed is the 1-row node-count
     broadcast, and top-k must be TakeOrderedAndProject, never a global
     sort."""
-    from ocrautomator_spark.queries.graph import QUERIES as GQ
 
-    plan = _plan(GQ["graph_pagerank_topk"](spark, SF_DIR))
+    plan = _plan(QUERIES["graph_pagerank_topk"](spark, SF_DIR))
     assert plan.count("BroadcastNestedLoopJoin") <= 2  # 1-row nn broadcast only
     assert "CartesianProduct" not in plan
     assert "TakeOrderedAndProject" in plan

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import pandas as pd
 
+from ocrautomator_spark.queries import QUERIES
 from ocrautomator_spark.queries.pipeline_ops import _LANG_PROFILES, _hyperplanes
 
 
@@ -32,7 +33,7 @@ def test_lang_id_on_real_sentences(spark):
     orig = po.T
     try:
         po.T = lambda s, sf, name: df  # the lang_id query reads only `documents`
-        out = {r["lang"]: r["lang_pred"] for r in po.QUERIES["lang_id"](spark, "unused").collect()}
+        out = {r["lang"]: r["lang_pred"] for r in QUERIES["lang_id"](spark, "unused").collect()}
     finally:
         po.T = orig
     correct = sum(1 for k, v in out.items() if k == v)
@@ -86,7 +87,7 @@ def test_minhash_hot_bucket_cap_bounds_degenerate_corpus(spark):
     orig = po.T
     try:
         po.T = lambda s, sf, name: df
-        rows = po.QUERIES["dedup_minhash_lsh"](spark, "unused").collect()
+        rows = QUERIES["dedup_minhash_lsh"](spark, "unused").collect()
     finally:
         po.T = orig
     pairs = {(r["doc_a"], r["doc_b"]) for r in rows}
@@ -110,7 +111,7 @@ def test_minhash_cap_keeps_small_buckets(spark):
     orig = po.T
     try:
         po.T = lambda s, sf, name: df
-        rows = po.QUERIES["dedup_minhash_lsh"](spark, "unused").collect()
+        rows = QUERIES["dedup_minhash_lsh"](spark, "unused").collect()
     finally:
         po.T = orig
     pairs = {(r["doc_a"], r["doc_b"]) for r in rows}
@@ -122,11 +123,9 @@ def test_multiprobe_recall_on_real_corpus(spark):
     """recall@10 ≥ 0.9 vs the exact brute-force top-k at the driver's scale
     (this corpus's neighbors sit at cos≈0.5, hence PROBE_RADIUS=4 — see the
     ann_lsh_multiprobe docstring for the calibration math)."""
-    from ocrautomator_spark.queries import pipeline_ops as po
-
     sf = "/root/testdata/sf0.01"
-    exact = {r["vec_id"] for r in po.QUERIES["ann_cosine_topk"](spark, sf).collect()}
-    multi = {r["vec_id"] for r in po.QUERIES["ann_lsh_multiprobe"](spark, sf).collect()}
+    exact = {r["vec_id"] for r in QUERIES["ann_cosine_topk"](spark, sf).collect()}
+    multi = {r["vec_id"] for r in QUERIES["ann_lsh_multiprobe"](spark, sf).collect()}
     recall = len(exact & multi) / len(exact)
     assert recall >= 0.9, f"multiprobe recall@10 = {recall}"
 
@@ -190,7 +189,7 @@ def test_cluster_keeper_on_handbuilt_graph(spark):
     orig = po.T
     try:
         po.T = lambda s, sf, name: df
-        out = {r["doc_id"]: r["keeper"] for r in po.QUERIES["dedup_cluster_keeper"](spark, "unused").collect()}
+        out = {r["doc_id"]: r["keeper"] for r in QUERIES["dedup_cluster_keeper"](spark, "unused").collect()}
     finally:
         po.T = orig
     assert out[10] == 10 and out[11] == 10 and out[12] == 10, f"path cluster: {out}"
@@ -201,11 +200,9 @@ def test_cluster_keeper_on_handbuilt_graph(spark):
 def test_ivf_recall_on_real_corpus(spark):
     """IVF with NPROBE/NLIST = 4/16 cells scanned reaches full recall@10 on
     this corpus at the driver's scale."""
-    from ocrautomator_spark.queries import pipeline_ops as po
-
     sf = "/root/testdata/sf0.01"
-    exact = {r["vec_id"] for r in po.QUERIES["ann_cosine_topk"](spark, sf).collect()}
-    ivf = {r["vec_id"] for r in po.QUERIES["ann_ivf_topk"](spark, sf).collect()}
+    exact = {r["vec_id"] for r in QUERIES["ann_cosine_topk"](spark, sf).collect()}
+    ivf = {r["vec_id"] for r in QUERIES["ann_ivf_topk"](spark, sf).collect()}
     recall = len(exact & ivf) / len(exact)
     assert recall >= 0.9, f"IVF recall@10 = {recall}"
 
@@ -252,8 +249,8 @@ def test_kmeanspp_beats_naive_seeding(spark):
     qerr_kpp = _ivf_refined_qerr(spark, e, po._kcenter_seed_cents(spark, e))
     assert qerr_kpp < qerr_naive, f"k-means++ {qerr_kpp} not < naive {qerr_naive}"
 
-    exact = {r["vec_id"] for r in po.QUERIES["ann_cosine_topk"](spark, sf).collect()}
-    km = {r["vec_id"] for r in po.QUERIES["ann_ivf_kmeans_topk"](spark, sf).collect()}
+    exact = {r["vec_id"] for r in QUERIES["ann_cosine_topk"](spark, sf).collect()}
+    km = {r["vec_id"] for r in QUERIES["ann_ivf_kmeans_topk"](spark, sf).collect()}
     # deterministic; measured 0.3 with the k-center seeds ≈ the NPROBE/NLIST
     # scan fraction (0.25) this diffuse corpus predicts (the old seeds' 0.6
     # was seed-placement luck, same class as the 0.9 artifact noted above)
@@ -301,7 +298,7 @@ def test_ivf_kmeans_planted_neighborhood_recall(spark):
     orig = po.T
     try:
         po.T = lambda s, sfd, name: corpus
-        got = [r["vec_id"] for r in po.QUERIES["ann_ivf_kmeans_topk"](spark, "unused").collect()]
+        got = [r["vec_id"] for r in QUERIES["ann_ivf_kmeans_topk"](spark, "unused").collect()]
     finally:
         po.T = orig
     recall = len(set(got) & set(range(1_000_001, 1_000_011))) / 10
@@ -313,8 +310,6 @@ def test_or_lsh_pair_recall(spark):
     gate scale (sf0.01 — which is what makes the exact oracle hold there) and
     >=0.9 at sf0.1, matching the 1-(1-p^3)^8 analysis in the docstring."""
     import duckdb
-
-    from ocrautomator_spark.queries import pipeline_ops as po
 
     for sf, bound in [("/root/testdata/sf0.01", 1.0), ("/root/testdata/sf0.1", 0.9)]:
         con = duckdb.connect()
@@ -335,7 +330,7 @@ def test_or_lsh_pair_recall(spark):
         )
         got = {
             (r["vec_a"], r["vec_b"])
-            for r in po.QUERIES["dedup_embedding_lsh_any"](spark, sf).collect()
+            for r in QUERIES["dedup_embedding_lsh_any"](spark, sf).collect()
         }
         recall = len(got & exact) / max(len(exact), 1)
         assert recall >= bound, f"{sf}: recall {recall} < {bound}"
@@ -407,7 +402,7 @@ def test_simhash_hot_bucket_star_on_degenerate_corpus(spark):
     orig = po.T
     try:
         po.T = lambda s, sf, name: df
-        rows = po.QUERIES["dedup_simhash"](spark, "unused").collect()
+        rows = QUERIES["dedup_simhash"](spark, "unused").collect()
     finally:
         po.T = orig
     pairs = {(r["doc_a"], r["doc_b"]) for r in rows}
@@ -470,10 +465,9 @@ def test_pack_bins_no_corpus_single_partition_window(spark):
     import contextlib
     import io
 
-    from ocrautomator_spark.queries.pipeline_ops import QUERIES as POQ
     from tests.conftest import SF_DIR
 
-    df = POQ["pack_contiguous_bins"](spark, SF_DIR)
+    df = QUERIES["pack_contiguous_bins"](spark, SF_DIR)
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain()
@@ -533,7 +527,7 @@ def test_ann_probe_cost_observability(spark):
     assert 0 < m["rows_scanned"] < n_corpus  # sub-corpus, but honestly counted
 
     obs2 = Observation("ivf")
-    po.QUERIES["ann_ivf_topk"](spark, sf, observation=obs2).collect()
+    QUERIES["ann_ivf_topk"](spark, sf, observation=obs2).collect()
     m2 = obs2.get
     assert m2["cells_probed"] == po.IVF_NPROBE and m2["cells_total"] == po.IVF_NLIST
     assert 0 < m2["rows_scanned"] < n_corpus
@@ -555,9 +549,9 @@ def test_weighted_minhash_distinguishes_frequency(spark):
     try:
         po.T = lambda s, sf, name: df
         unw = {(r["doc_a"], r["doc_b"]): r["est_jaccard"]
-               for r in po.QUERIES["dedup_minhash_lsh"](spark, "unused").collect()}
+               for r in QUERIES["dedup_minhash_lsh"](spark, "unused").collect()}
         wgt = {(r["doc_a"], r["doc_b"]): r["est_weighted_jaccard"]
-               for r in po.QUERIES["dedup_minhash_weighted"](spark, "unused").collect()}
+               for r in QUERIES["dedup_minhash_weighted"](spark, "unused").collect()}
     finally:
         po.T = orig
     # unweighted: set-identical docs all pair at 1.0 (including the 10× vs 2× pair)
@@ -595,7 +589,7 @@ def test_weighted_minhash_estimates_weighted_jaccard(spark):
     orig = po.T
     try:
         po.T = lambda s, sf, name: df
-        rows = po.QUERIES["dedup_minhash_weighted"](spark, "unused").collect()
+        rows = QUERIES["dedup_minhash_weighted"](spark, "unused").collect()
     finally:
         po.T = orig
     est = {(r["doc_a"], r["doc_b"]): r["est_weighted_jaccard"] for r in rows}
@@ -616,7 +610,7 @@ def test_weighted_minhash_degenerate_corpus_star_guard(spark):
     orig = po.T
     try:
         po.T = lambda s, sf, name: df
-        rows = po.QUERIES["dedup_minhash_weighted"](spark, "unused").collect()
+        rows = QUERIES["dedup_minhash_weighted"](spark, "unused").collect()
     finally:
         po.T = orig
     pairs = {(r["doc_a"], r["doc_b"]) for r in rows}
@@ -632,7 +626,7 @@ def test_substring_windows_planted_recall(spark):
     from ocrautomator_spark.queries import pipeline_ops as po
 
     sf_dir = "/root/testdata/sf0.001"
-    rows = po.QUERIES["dedup_substring_windows"](spark, sf_dir).collect()
+    rows = QUERIES["dedup_substring_windows"](spark, sf_dir).collect()
     pairs = {(r["doc_a"], r["doc_b"]): r["n_shared_windows"] for r in rows}
 
     import pyarrow.parquet as pq
@@ -676,7 +670,7 @@ def test_substring_windows_shift_invariance(spark):
     orig = po.T
     try:
         po.T = lambda s, sf, name: df
-        rows = po.QUERIES["dedup_substring_windows"](spark, "unused").collect()
+        rows = QUERIES["dedup_substring_windows"](spark, "unused").collect()
     finally:
         po.T = orig
     pairs = {(r["doc_a"], r["doc_b"]): r["n_shared_windows"] for r in rows}
@@ -710,7 +704,7 @@ def test_pq_adc_planted_neighborhood_recall(spark):
     orig = po.T
     try:
         po.T = lambda s, sfd, name: corpus
-        got = [r["vec_id"] for r in po.QUERIES["ann_pq_adc_topk"](spark, "unused").collect()]
+        got = [r["vec_id"] for r in QUERIES["ann_pq_adc_topk"](spark, "unused").collect()]
     finally:
         po.T = orig
     recall = len(set(got) & set(range(1_000_001, 1_000_011))) / 10
@@ -726,7 +720,7 @@ def test_substring_spans_cover_planted_passage(spark):
     from ocrautomator_spark.queries import pipeline_ops as po
 
     sf_dir = "/root/testdata/sf0.001"
-    spans = {r["doc_id"]: r for r in po.QUERIES["dedup_substring_spans"](spark, sf_dir).collect()}
+    spans = {r["doc_id"]: r for r in QUERIES["dedup_substring_spans"](spark, sf_dir).collect()}
     planted = [d for d in spans if d < 0]
     assert len(planted) >= 10, f"vacuous: only {len(planted)} planted docs localized"
     head = len("zqplant-head ")
@@ -752,7 +746,7 @@ def test_minhash_fast_mode_pair_set_agreement(spark):
     minhash entries; this is the fast default's correctness anchor."""
     import os
 
-    from ocrautomator_spark.queries.pipeline_ops import MINHASH_ORACLE_ENV, QUERIES
+    from ocrautomator_spark.queries.pipeline_ops import MINHASH_ORACLE_ENV
 
     sf = os.environ.get("SPARK_GRAFT_PARITY_SF", "/root/testdata/sf0.001")
     assert os.environ.get(MINHASH_ORACLE_ENV) != "1", "oracle env leaked into tests"
@@ -795,7 +789,7 @@ def test_pq_sampled_planted_neighborhood_recall(spark):
         # the persisted-index cache keys on the sf path: drop any stale
         # "unused" store before AND after so planted codes never leak
         po._PQ2_STORE_ROOTS.pop(_os.path.abspath("unused"), None)
-        got = [r["vec_id"] for r in po.QUERIES["ann_pq_sampled_topk"](spark, "unused").collect()]
+        got = [r["vec_id"] for r in QUERIES["ann_pq_sampled_topk"](spark, "unused").collect()]
     finally:
         po.T = orig
         po._PQ2_STORE_ROOTS.pop(_os.path.abspath("unused"), None)
@@ -808,15 +802,13 @@ def test_pq_sampled_beats_counterhash_on_near_uniform(spark):
     cosine top-10, the sampled-codebook entry must reach recall ≥ 0.8 at the
     gate scale and strictly beat the counter-hash entry (measured
     0.9 vs 0.5 at sf0.01, 0.9 vs 0.4 at sf0.1)."""
-    from ocrautomator_spark.queries import pipeline_ops as po
-
     sf = "/root/testdata/sf0.01"
-    exact = {r["vec_id"] for r in po.QUERIES["ann_cosine_topk"](spark, sf).collect()}
+    exact = {r["vec_id"] for r in QUERIES["ann_cosine_topk"](spark, sf).collect()}
     rand_r = len(
-        {r["vec_id"] for r in po.QUERIES["ann_pq_adc_topk"](spark, sf).collect()} & exact
+        {r["vec_id"] for r in QUERIES["ann_pq_adc_topk"](spark, sf).collect()} & exact
     ) / len(exact)
     samp_r = len(
-        {r["vec_id"] for r in po.QUERIES["ann_pq_sampled_topk"](spark, sf).collect()} & exact
+        {r["vec_id"] for r in QUERIES["ann_pq_sampled_topk"](spark, sf).collect()} & exact
     ) / len(exact)
     assert samp_r >= 0.8, f"sampled-codebook recall {samp_r} below the 0.8 bar"
     assert samp_r > rand_r, f"sampled {samp_r} did not beat counter-hash {rand_r}"
@@ -831,13 +823,11 @@ def test_pq_batch_recall_and_plan(spark):
     import contextlib
     import io
 
-    from ocrautomator_spark.queries import pipeline_ops as po
-
     sf = "/root/testdata/sf0.01"
     exact, got = {}, {}
-    for r in po.QUERIES["ann_batch_topk"](spark, sf).collect():
+    for r in QUERIES["ann_batch_topk"](spark, sf).collect():
         exact.setdefault(r.query_id, set()).add(r.vec_id)
-    df = po.QUERIES["ann_pq_batch_topk"](spark, sf)
+    df = QUERIES["ann_pq_batch_topk"](spark, sf)
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
@@ -859,8 +849,8 @@ def test_substring_spans_rk_cover_planted_passage(spark):
     from ocrautomator_spark.queries import pipeline_ops as po
 
     sf_dir = "/root/testdata/sf0.001"
-    rk = {r["doc_id"]: r for r in po.QUERIES["dedup_substring_spans_rk"](spark, sf_dir).collect()}
-    md5v = {r["doc_id"]: r for r in po.QUERIES["dedup_substring_spans"](spark, sf_dir).collect()}
+    rk = {r["doc_id"]: r for r in QUERIES["dedup_substring_spans_rk"](spark, sf_dir).collect()}
+    md5v = {r["doc_id"]: r for r in QUERIES["dedup_substring_spans"](spark, sf_dir).collect()}
     rk_planted = {d for d in rk if d < 0}
     md5_planted = {d for d in md5v if d < 0}
     assert rk_planted == md5_planted, (
@@ -889,16 +879,16 @@ def test_pq_index_builds_once_and_queries_read_artifact(spark):
     # isolate from any store another test already built for this corpus
     po._PQ2_STORE_ROOTS.pop(__import__("os").path.abspath(SF_DIR), None)
     n0 = po._PQ2_BUILD_COUNT["n"]
-    stats = {r["m"]: r for r in po.QUERIES["ann_index_build"](spark, SF_DIR).collect()}
+    stats = {r["m"]: r for r in QUERIES["ann_index_build"](spark, SF_DIR).collect()}
     assert po._PQ2_BUILD_COUNT["n"] == n0 + 1
     assert set(stats) == set(range(po.PQ_M))
     n_vecs = stats[0]["n_vectors"]
     assert n_vecs > 0 and all(s["n_vectors"] == n_vecs for s in stats.values())
     assert all(1 <= s["n_codes_used"] <= s["n_centroids"] for s in stats.values())
 
-    sampled = po.QUERIES["ann_pq_sampled_topk"](spark, SF_DIR).collect()
-    batch = po.QUERIES["ann_pq_batch_topk"](spark, SF_DIR).collect()
-    rebuilt = po.QUERIES["ann_index_build"](spark, SF_DIR).collect()
+    sampled = QUERIES["ann_pq_sampled_topk"](spark, SF_DIR).collect()
+    batch = QUERIES["ann_pq_batch_topk"](spark, SF_DIR).collect()
+    rebuilt = QUERIES["ann_index_build"](spark, SF_DIR).collect()
     assert po._PQ2_BUILD_COUNT["n"] == n0 + 1, "a later call retrained the index"
     assert {r["m"]: r.asDict() for r in rebuilt} == {r["m"]: r.asDict() for r in stats.values()}
 
@@ -910,7 +900,7 @@ def test_pq_index_builds_once_and_queries_read_artifact(spark):
     books_a, cssqs_a, _ = po._pq2_index(spark, SF_DIR)
     assert books_a == books_f and cssqs_a == cssqs_f
     assert [r.asDict() for r in sampled] == [
-        r.asDict() for r in po.QUERIES["ann_pq_sampled_topk"](spark, SF_DIR).collect()
+        r.asDict() for r in QUERIES["ann_pq_sampled_topk"](spark, SF_DIR).collect()
     ]
     assert len(sampled) == po.ANN_K and len(batch) == po.ANN_BATCH_QUERIES * po.ANN_K
 
@@ -925,7 +915,7 @@ def test_ann_index_incremental_appends_only_the_new_batch(spark):
     po = importlib.import_module("ocrautomator_spark.queries.pipeline_ops")
     from tests.conftest import SF_DIR
 
-    rows = {r["m"]: r for r in po.QUERIES["ann_index_incremental"](spark, SF_DIR).collect()}
+    rows = {r["m"]: r for r in QUERIES["ann_index_incremental"](spark, SF_DIR).collect()}
     e = po.T(spark, SF_DIR, "embeddings")
     n_all = e.count()
     n_new = e.filter(f"vec_id % {po.INCIDX_MOD} = {po.INCIDX_MOD - 1}").count()

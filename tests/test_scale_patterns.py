@@ -109,9 +109,9 @@ def test_aqe_coalesces_tiny_shuffle(spark):
 def test_bucketed_query_entry_plan_has_no_exchange(spark):
     """The driver-gated join_bucketed_colocated entry: no Exchange (and no
     Sort beyond the bucket sort) feeding the SortMergeJoin."""
-    from ocrautomator_spark.queries.scale_demo import QUERIES as SQ
+    from ocrautomator_spark.queries import QUERIES
 
-    plan = _plan(SQ["join_bucketed_colocated"](spark, SF_DIR))
+    plan = _plan(QUERIES["join_bucketed_colocated"](spark, SF_DIR))
     assert "SortMergeJoin" in plan
     before_agg = plan.split("HashAggregate")[0]
     join_idx = before_agg.find("SortMergeJoin")
@@ -121,9 +121,9 @@ def test_bucketed_query_entry_plan_has_no_exchange(spark):
 
 
 def test_dpp_query_entry_plan_prunes(spark):
-    from ocrautomator_spark.queries.scale_demo import QUERIES as SQ
+    from ocrautomator_spark.queries import QUERIES
 
-    plan = _plan(SQ["join_dpp_partitioned"](spark, SF_DIR))
+    plan = _plan(QUERIES["join_dpp_partitioned"](spark, SF_DIR))
     assert "dynamicpruning" in plan.lower(), "dynamic partition pruning not planned"
 
 
@@ -137,7 +137,8 @@ def test_agg_approx_within_error_bound(spark):
     of magnitude, not percent)."""
     from pyspark.sql import functions as F
 
-    from ocrautomator_spark.queries.relational import QUERIES as RQ, T
+    from ocrautomator_spark.queries import QUERIES
+    from ocrautomator_spark.queries.relational import T
 
     sf = "/root/testdata/sf0.01"
     raw = (
@@ -146,13 +147,13 @@ def test_agg_approx_within_error_bound(spark):
         .agg(F.approx_count_distinct("user_id", rsd=0.02).alias("approx_users"))
     )
     approx = {r["event_type"]: r["approx_users"] for r in raw.collect()}
-    exact = {r["event_type"]: r["n_users"] for r in RQ["agg_distinct"](spark, sf).collect()}
+    exact = {r["event_type"]: r["n_users"] for r in QUERIES["agg_distinct"](spark, sf).collect()}
     assert set(approx) == set(exact)
     for et, ex in exact.items():
         assert abs(approx[et] - ex) <= 5 * 0.02 * ex, (
             f"{et}: approx {approx[et]} vs exact {ex} outside 5*rsd bound"
         )
-    gated = RQ["agg_approx"](spark, sf).collect()
+    gated = QUERIES["agg_approx"](spark, sf).collect()
     assert gated and all(r["within_tol"] == 1 for r in gated)
     assert {r["event_type"]: r["n_users_exact"] for r in gated} == exact
 
@@ -225,6 +226,7 @@ def test_substring_family_scale_guards(spark, tmp_path):
     from pyspark.sql import functions as F
 
     import ocrautomator_spark.queries.pipeline_ops as po
+    from ocrautomator_spark.queries import QUERIES
 
     # (a) shuffle-volume bound at sf0.1 on the real corpus
     sf = "/root/testdata/sf0.1"
@@ -284,7 +286,7 @@ def test_substring_family_scale_guards(spark, tmp_path):
         "the boilerplate run selected no window under this hash (re-seed)"
     )
     for qname in ("dedup_substring_windows", "dedup_substring_windows_rk"):
-        pairs = po.QUERIES[qname](spark, str(tmp_path)).count()
+        pairs = QUERIES[qname](spark, str(tmp_path)).count()
         assert pairs == 0, (
             f"{qname}: {pairs} pairs from a >MAX_DF boilerplate bucket — "
             "the stop-window guard did not cap the hot bucket"
@@ -302,10 +304,11 @@ def test_skew_salted_join_spreads_hot_key_and_keeps_salt_in_exchange(spark):
 
     from pyspark.sql import functions as F
 
+    from ocrautomator_spark.queries import QUERIES
     from ocrautomator_spark.queries import scale_demo as sd
     from tests.conftest import SF_DIR
 
-    df = sd.QUERIES["join_skew_salted"](spark, SF_DIR)
+    df = QUERIES["join_skew_salted"](spark, SF_DIR)
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")

@@ -7,8 +7,8 @@ from __future__ import annotations
 import uuid
 
 from ocrautomator_spark.spark.extract_job import run_extract
+from ocrautomator_spark.spark.schemas import TRANSCRIPTS
 from ocrautomator_spark.spark.synth_job import synth_transcripts_df
-from ocrautomator_spark.streaming.extract_stream import extract_stream, transcripts_stream
 
 
 def _key_rows(df):
@@ -32,7 +32,7 @@ def test_streaming_extract_equals_batch(spark, tmp_path):
 
     name = f"sx_{uuid.uuid4().hex[:8]}"
     q = (
-        extract_stream(transcripts_stream(spark, inp), n_partitions=4)
+        run_extract(spark.readStream.schema(TRANSCRIPTS).parquet(inp), n_partitions=4)
         .writeStream.format("memory")
         .queryName(name)
         .outputMode("append")

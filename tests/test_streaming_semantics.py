@@ -81,10 +81,8 @@ def test_stateful_sessionize_continues_sessions_across_microbatches(spark, tmp_p
 
     import duckdb
 
-    from ocrautomator_spark.queries.events_analytics import (
-        QUERIES as EQ,
-        SESSION_GAP_US,
-    )
+    from ocrautomator_spark.queries import QUERIES
+    from ocrautomator_spark.queries.events_analytics import SESSION_GAP_US
     from ocrautomator_spark.streaming.jobs import stateful_sessionize
     from tests.conftest import SF_DIR
 
@@ -122,7 +120,7 @@ def test_stateful_sessionize_continues_sessions_across_microbatches(spark, tmp_p
         .parquet(str(indir))
     )
     streamed = stateful_sessionize(spark, SF_DIR, gap_us=SESSION_GAP_US, stream=stream)
-    batch = EQ["events_sessionize"](spark, SF_DIR)
+    batch = QUERIES["events_sessionize"](spark, SF_DIR)
     cols = sorted(batch.columns)
     s = sorted(tuple(r) for r in streamed.select(*cols).collect())
     b = sorted(tuple(r) for r in batch.select(*cols).collect())
@@ -361,6 +359,7 @@ def test_streaming_dedup_incremental_kill_between_data_write_and_commit(spark, t
     directory, after which the result is still identical."""
     from pyspark.sql import functions as F
 
+    from ocrautomator_spark.queries import QUERIES
     from ocrautomator_spark.queries import corpus_ops as co
     from ocrautomator_spark.spark.tableio import ParquetManifestIO
     from tests.conftest import SF_DIR
@@ -378,7 +377,7 @@ def test_streaming_dedup_incremental_kill_between_data_write_and_commit(spark, t
     assert io.committed_buckets() == set(), "torn write must not count as committed"
 
     exp = sorted(
-        r["doc_id"] for r in co.QUERIES["dedup_incremental_snapshot"](spark, SF_DIR).collect()
+        r["doc_id"] for r in QUERIES["dedup_incremental_snapshot"](spark, SF_DIR).collect()
     )
     got1 = sorted(
         r["doc_id"]

@@ -20,8 +20,8 @@ from collections import defaultdict
 import pyarrow as pa
 import pyarrow.parquet as pq
 
+from ocrautomator_spark.queries import QUERIES
 from ocrautomator_spark.queries.pipeline_ops import (
-    QUERIES,
     SUBSTR_MIN_SHARED,
     SUBSTR_PLANT_LEN,
     SUBSTR_PLANT_MOD,
