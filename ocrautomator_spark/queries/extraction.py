@@ -96,13 +96,7 @@ def pipeline_e2e(spark: SparkSession, sf: str) -> DataFrame:
     corpus rollup. One extraction pass, one dedup shuffle on a fixed-width
     key, one agg — the shape a 100 TB corpus build actually runs. Oracled
     exactly via the plain-text identity."""
-    # cluster-sized partition count, not the 4x-cores shuffle conf (r7):
-    # fewer mapInArrow tasks for a 5k-row adapter input — see flagship
-    ext = run_extract(
-        documents_as_transcripts(spark, sf),
-        n_partitions=spark.sparkContext.defaultParallelism,
-        passthrough=["lang"],
-    )
+    ext = run_extract(documents_as_transcripts(spark, sf), passthrough=["lang"])
     kept = ext.filter(F.size(F.split("extracted_text", " ")) >= MIN_PIPE_WORDS)
     ded = kept.groupBy(F.sha2(F.encode("extracted_text", "utf-8"), 256).alias("_k")).agg(
         F.min("conv_id").alias("keeper"),

@@ -112,6 +112,19 @@ def _output_schema(df: DataFrame, passthrough: list[str]) -> StructType:
     return StructType([in_fields[c] for c in keep] + EXTRACT_FIELDS)
 
 
+def extract_partitions(df: DataFrame) -> int:
+    """Default partition count for the Python stage over ``df``: one task per
+    core (``defaultParallelism``). Each mapInArrow task pays a fixed
+    Python-worker start (0.15-0.2 s per task per core, measured on a 4-core
+    box), so cutting an input into the shuffle-partitions conf (4x cores)
+    spent more time starting tasks than extracting. A stream keeps
+    ``spark.sql.shuffle.partitions``."""
+    spark = df.sparkSession
+    if df.isStreaming:
+        return int(spark.conf.get("spark.sql.shuffle.partitions"))
+    return spark.sparkContext.defaultParallelism
+
+
 def run_extract(
     df: DataFrame,
     n_partitions: int | None = None,
@@ -124,14 +137,15 @@ def run_extract(
     A streaming ``df`` (readStream) gets the same plan minus the per-partition
     sort, which Spark refuses on a stream: ordering an unbounded stream is the
     sink's concern.
+
+    ``n_partitions`` defaults to ``extract_partitions(df)``: one task per core.
     """
     passthrough = passthrough or []
     schema = _output_schema(df, passthrough)
     # column pruning before the Python stage: ship exactly what's needed
     in_cols = [c for c in EXTRACT_KEY_COLS if c in df.columns] + ["text"] + passthrough
     df = df.select(*in_cols)
-    spark = df.sparkSession
-    n = n_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n = n_partitions or extract_partitions(df)
     # ONE repartition for the whole job (SURVEY.md §4): hash of
     # (conv_id, turn_idx mod salt) spreads hot conversations over salt buckets
     parts = df.repartition(n, F.col("conv_id"), F.pmod(F.col("turn_idx"), F.lit(SALT_BUCKETS)))
@@ -162,16 +176,7 @@ def documents_as_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship query (driver smoke): extraction kernel over ``documents`` +
     an agg_hash rollup by (lang, payload_kind). Stable schema, rows > 0."""
-    # partition count sized to the cluster, not the shuffle-partitions conf
-    # (r7): the conf default (4x cores) is tuned for the multi-million-turn
-    # extract job; on the documents adapter it meant 4x more mapInArrow
-    # tasks than cores, each paying Arrow+dispatch overhead for a few dozen
-    # rows (measured 1.6s -> 0.8s at sf0.1)
-    ext = run_extract(
-        documents_as_transcripts(spark, sf_dir),
-        n_partitions=spark.sparkContext.defaultParallelism,
-        passthrough=["lang", "source"],
-    )
+    ext = run_extract(documents_as_transcripts(spark, sf_dir), passthrough=["lang", "source"])
     return (
         ext.groupBy("lang", "payload_kind")
         .agg(
@@ -189,6 +194,7 @@ __all__ = [
     "TRANSCRIPTS",
     "SALT_BUCKETS",
     "extract_batches",
+    "extract_partitions",
     "run_extract",
     "documents_as_transcripts",
     "flagship",

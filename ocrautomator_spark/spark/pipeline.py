@@ -12,7 +12,8 @@ each individually retryable, none recomputed after a crash.
 Per-chunk metrics (rows, chars, error count, batch latency) come from
 ``df.observe`` — Spark's accumulator path, i.e. zero extra actions — and are
 persisted INTO the manifest: the rebuild of the reference's live stats
-display (A13) as durable run metadata.
+display (A13) as durable run metadata, next to the chunk's partition count
+(``n_partitions``).
 """
 
 from __future__ import annotations
@@ -23,7 +24,7 @@ import uuid
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from ocrautomator_spark.spark.extract_job import run_extract
+from ocrautomator_spark.spark.extract_job import extract_partitions, run_extract
 from ocrautomator_spark.spark.tableio import ParquetManifestIO
 
 BUCKET_COL = "_bucket"
@@ -33,7 +34,7 @@ def bucket_of(n_buckets: int):
     return F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
 
 
-def _run_chunk(with_bucket: DataFrame, io: ParquetManifestIO, b: int, n_partitions: int | None, run_id: str) -> dict:
+def _run_chunk(with_bucket: DataFrame, io: ParquetManifestIO, b: int, n_partitions: int, run_id: str) -> dict:
     chunk = with_bucket.filter(F.col(BUCKET_COL) == b).drop(BUCKET_COL)
     obs = Observation(f"extract_{run_id}_b{b}")
     ext = run_extract(chunk, n_partitions=n_partitions).observe(
@@ -52,6 +53,7 @@ def _run_chunk(with_bucket: DataFrame, io: ParquetManifestIO, b: int, n_partitio
         for k, v in obs.get.items()
     }
     stats["wall_sec"] = round(wall, 3)
+    stats["n_partitions"] = n_partitions
     return io.commit_bucket(b, run_id, stats)
 
 
@@ -75,11 +77,16 @@ def run_pipeline(
     cluster). Serial chunks leave executors idle during each job's tail; a
     small concurrency (2–4) keeps a 1000-executor cluster saturated while
     preserving the per-chunk commit/retry granularity.
+
+    ``n_partitions`` (the Python stage's task count per chunk) defaults to
+    ``extract_partitions(input_df)``, one task per core, computed once per
+    run and recorded in every chunk's manifest.
     """
     run_id = run_id or uuid.uuid4().hex[:12]
     done = io.committed_buckets()
     with_bucket = input_df.withColumn(BUCKET_COL, bucket_of(n_buckets))
     todo = [b for b in range(n_buckets) if b not in done]
+    n_partitions = n_partitions or extract_partitions(input_df)
 
     if max_concurrent <= 1:
         committed: list[dict] = []

@@ -13,7 +13,16 @@ import os
 
 from pyspark.sql import SparkSession
 
-ARROW_BATCH_ROWS = 10000  # raw payloads ~1 KB → ~10 MB batches; amortizes per-batch overhead
+# Rows per Arrow batch into a Python worker (every mapInArrow, mapInPandas
+# and pandas_udf in the session). The extract job runs one mapInArrow task
+# per core (extract_partitions), so each worker streams its whole share of a
+# chunk, and its peak memory grows with the batch size. Peak Python PSS of
+# the 80 000-turn perfbench backfill at local[2] on a 4-core box: 285 MB at
+# 2048 rows, 299-302 MB at 4096, 317-322 MB at 10 000, walls the same within
+# run-to-run noise. The Arrow/pandas headline queries (pipeline_e2e,
+# extract_flagship, dedup_substring_windows_rk) were as fast or faster at
+# 2048 as at 10 000 rows on sf 0.05 and sf 0.4 tables.
+ARROW_BATCH_ROWS = 2048
 
 
 def get_spark(

@@ -32,7 +32,10 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--synth-convs", type=int, help="generate N synthetic conversations instead of --input")
     p.add_argument("--output", required=True, help="output root (parquet data + _manifests)")
     p.add_argument("--buckets", type=int, default=16, help="checkpoint chunks (commit granularity)")
-    p.add_argument("--partitions", type=int, default=None, help="shuffle partitions per chunk")
+    p.add_argument(
+        "--partitions", type=int, default=None,
+        help="Python-stage tasks per chunk (default: one per core)",
+    )
     p.add_argument("--master", default=None, help="override master (default: existing session/local)")
     p.add_argument("--run-id", default=None)
     p.add_argument(

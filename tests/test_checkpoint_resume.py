@@ -68,6 +68,36 @@ def test_manifest_metrics_and_lineage(spark, tmp_path):
     assert {"extractor_version", "partition_id", "batch_latency_ms", "n_chars_in", "n_chars_out"} <= cols
 
 
+def test_partition_count_does_not_change_output(spark, tmp_path):
+    """The default count (one per core) and an explicit odd count produce
+    the same rows, every output file is ordered by (conv_id, turn_idx), and
+    each manifest records the count that ran."""
+    import pathlib
+
+    import pyarrow.parquet as pq
+
+    src = str(tmp_path / "in")
+    synth_transcripts_df(spark, 24).write.parquet(src)
+    inp = spark.read.parquet(src)
+    results = {}
+    for label, n_partitions, expect in (("default", None, spark.sparkContext.defaultParallelism), ("seven", 7, 7)):
+        io = ParquetManifestIO(str(tmp_path / label))
+        manifests = run_pipeline(inp, io, n_buckets=3, n_partitions=n_partitions, run_id=label)
+        assert [m["n_partitions"] for m in manifests] == [expect] * 3
+        for m in manifests:
+            for f in pathlib.Path(m["path"]).glob("*.parquet"):
+                keys = pq.read_table(f, columns=["conv_id", "turn_idx"]).to_pylist()
+                keys = [(k["conv_id"], k["turn_idx"]) for k in keys]
+                assert keys == sorted(keys), f"{f} not ordered by (conv_id, turn_idx)"
+        results[label] = sorted(
+            (r["conv_id"], r["turn_idx"], r["payload_kind"], r["extracted_text"],
+             tuple((s["start"], s["end"], s["kind"]) for s in r["spans"]))
+            for r in io.read(spark).collect()
+        )
+    assert results["default"] == results["seven"]
+    assert len(results["default"]) == inp.count()
+
+
 def test_torn_manifest_is_not_committed(tmp_path):
     io = ParquetManifestIO(str(tmp_path / "t"))
     (io.manifest_dir / "bucket-00001.json").write_text('{"bucke')  # torn write

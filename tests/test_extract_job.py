@@ -6,7 +6,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ocrautomator_spark.kernel import EXTRACTOR_VERSION
-from ocrautomator_spark.spark.extract_job import flagship, run_extract
+from ocrautomator_spark.spark.extract_job import extract_partitions, flagship, run_extract
+from ocrautomator_spark.spark.schemas import TRANSCRIPTS
 from ocrautomator_spark.spark.synth_job import synth_transcripts_df
 from tests.conftest import SF_DIR
 
@@ -76,3 +77,20 @@ def test_error_channel_never_breaks_batch(spark):
     assert len(out) == 1
     assert out[0]["extracted_text"] == ""
     assert out[0]["spans"] == []
+
+
+# ------------------------------------------------------- partition count
+
+
+def test_extract_partitions_is_one_task_per_core(spark, tmp_path):
+    path = str(tmp_path / "in")
+    synth_transcripts_df(spark, 10).write.parquet(path)
+    assert int(spark.conf.get("spark.sql.shuffle.partitions")) != spark.sparkContext.defaultParallelism
+    assert extract_partitions(spark.read.parquet(path)) == spark.sparkContext.defaultParallelism
+
+
+def test_extract_partitions_stream_falls_back_to_shuffle_partitions(spark, tmp_path):
+    path = str(tmp_path / "in")
+    synth_transcripts_df(spark, 5).write.parquet(path)
+    stream = spark.readStream.schema(TRANSCRIPTS).parquet(path)
+    assert extract_partitions(stream) == int(spark.conf.get("spark.sql.shuffle.partitions"))

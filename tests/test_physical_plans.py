@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ocrautomator_spark.queries import QUERIES
-from ocrautomator_spark.spark.extract_job import run_extract
+from ocrautomator_spark.spark.extract_job import flagship, run_extract
 from ocrautomator_spark.spark.synth_job import synth_transcripts_df
 from tests.conftest import SF_DIR
 
@@ -66,6 +66,22 @@ def test_extract_job_has_exactly_one_exchange(spark):
     n_exchanges = plan.count("Arguments: hashpartitioning")
     assert n_exchanges == 1, f"extract spine must hash-shuffle exactly once, saw {n_exchanges}"
     assert "REPARTITION_BY_NUM" in plan, "explicit partition count (AQE must not coalesce)"
+
+
+def test_extract_default_partitions_one_per_core(spark, tmp_path):
+    """With no explicit count, a parquet input is cut one partition per core
+    (extract_partitions), not into the shuffle-partitions conf; the
+    flagship's documents adapter gets the same count."""
+    import re
+
+    path = str(tmp_path / "in")
+    synth_transcripts_df(spark, 5).write.parquet(path)
+    cores = spark.sparkContext.defaultParallelism
+    assert int(spark.conf.get("spark.sql.shuffle.partitions")) != cores
+    # the adapter's turn_idx is the literal 0, so its salt folds to 0
+    spine = re.compile(r"hashpartitioning\(conv_id#\d+, (?:pmod\(turn_idx#\d+, 16\)|0), (\d+)\), REPARTITION_BY_NUM")
+    assert spine.findall(_plan(run_extract(spark.read.parquet(path)))) == [str(cores)]
+    assert spine.findall(_plan(flagship(spark, SF_DIR))) == [str(cores)]
 
 
 def test_extract_python_stage_reads_pruned_columns(spark):
