@@ -28,7 +28,6 @@ END_OF_WORD = "</w>"
 # token-true counting differ from word counting. Training saturates (every
 # word one token) at ~105 merges on this corpus, which would trivialize it.
 N_MERGES = 48
-_MERGES_FILE = pathlib.Path(__file__).parent / "bpe_merges.txt"
 
 
 def pretokenize(text: str) -> list[str]:
@@ -75,10 +74,6 @@ def train_bpe(texts: list[str], n_merges: int = N_MERGES) -> list[tuple[str, str
             new_vocab[key] = new_vocab.get(key, 0) + cnt
         vocab = new_vocab
     return merges
-
-
-def save_merges(merges: list[tuple[str, str]], path: pathlib.Path = _MERGES_FILE) -> None:
-    path.write_text("".join(f"{a}\t{b}\n" for a, b in merges), encoding="utf-8")
 
 
 def load_merges(path: pathlib.Path | None = None) -> list[tuple[str, str]]:

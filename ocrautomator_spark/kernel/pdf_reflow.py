@@ -20,15 +20,6 @@ MIN_REPEATS = 2         # signature must recur on ≥ this many pages to be chro
 _SENT_END = (".", "!", "?", '."', '?"', '!"', ":", ")")
 
 
-def _lines_with_offsets(raw: str) -> list[tuple[int, int, str]]:
-    out = []
-    pos = 0
-    for ln in raw.split("\n"):
-        out.append((pos, pos + len(ln), ln))
-        pos += len(ln) + 1
-    return out
-
-
 def reflow_pdf(raw: str) -> list[Block]:
     """Return reflowed paragraph blocks with source spans.
 

@@ -2,11 +2,7 @@
 
 from __future__ import annotations
 
-import re
 import unicodedata
-
-_WS_RUN = re.compile(r"[ \t\r\f\v]+")
-_NL_RUN = re.compile(r"\n{3,}")
 
 # Per-language function-word sets (public-knowledge high-frequency closed-class
 # words) — used only as a weak tie-break signal in the block classifier (E6);
@@ -44,13 +40,6 @@ def nfc(s: str) -> str:
     # ASCII is NFC-invariant; str.isascii() is a cheap C scan that skips the
     # normalize call for the overwhelmingly common case
     return s if s.isascii() else unicodedata.normalize("NFC", s)
-
-
-def collapse_ws(s: str) -> str:
-    """Collapse horizontal whitespace runs to one space; trim line ends."""
-    s = _WS_RUN.sub(" ", s)
-    s = re.sub(r" ?\n ?", "\n", s)
-    return s.strip()
 
 
 def normalize_block_text(s: str) -> str:

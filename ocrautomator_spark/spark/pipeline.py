@@ -74,9 +74,11 @@ def run_pipeline(
 
     ``max_concurrent`` > 1 submits that many chunk jobs at once from driver
     threads (Spark's scheduler interleaves their tasks — FAIR pool on a real
-    cluster). Serial chunks leave executors idle during each job's tail; a
-    small concurrency (2–4) keeps a 1000-executor cluster saturated while
-    preserving the per-chunk commit/retry granularity.
+    cluster); each chunk job runs under the caller's Spark local properties
+    (job group, description, ``spark.scheduler.pool``) and job tags. Serial
+    chunks leave executors idle during each job's tail; a small concurrency
+    (2–4) keeps a 1000-executor cluster saturated while preserving the
+    per-chunk commit/retry granularity.
 
     ``n_partitions`` (the Python stage's task count per chunk) defaults to
     ``extract_partitions(input_df)``, one task per core, computed once per
@@ -98,10 +100,16 @@ def run_pipeline(
 
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
+    # pool threads start with no Spark local properties (pinned-thread
+    # mode): the wrapper carries the caller's job group, description,
+    # scheduler pool and job tags into every chunk job
+    run_chunk = inheritable_thread_target(input_df.sparkSession)(_run_chunk)
     limit = len(todo) if fail_after is None else min(fail_after, len(todo))
     with ThreadPoolExecutor(max_workers=max_concurrent) as pool:
         futures = [
-            pool.submit(_run_chunk, with_bucket, io, b, n_partitions, run_id)
+            pool.submit(run_chunk, with_bucket, io, b, n_partitions, run_id)
             for b in todo[:limit]
         ]
         committed = [f.result() for f in futures]

@@ -14,24 +14,36 @@ from __future__ import annotations
 import json
 import os
 import pathlib
+import threading
 import time
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
 # one snapshot-log lock per resolved store root (see ParquetManifestIO.__init__)
-import threading as _threading
-
 _SNAP_LOCKS: dict[str, Any] = {}
-_SNAP_LOCKS_GUARD = _threading.Lock()
+_SNAP_LOCKS_GUARD = threading.Lock()
+
+
+def _load_manifest(p: pathlib.Path) -> dict[str, Any] | None:
+    """The ONE manifest validity rule: a manifest is committed iff it parses
+    to an object with an int ``bucket`` and a ``path``. Anything else — a
+    torn write, a path-less or hand-edited file — is "not committed":
+    skipped by readers and resume alike, never a crash, so a resume
+    recomputes the bucket instead of skipping rows no reader can see."""
+    try:
+        m = json.loads(p.read_text())
+    except (FileNotFoundError, ValueError):  # no manifest, or a torn write
+        return None
+    if not isinstance(m, dict) or type(m.get("bucket")) is not int or "path" not in m:
+        return None
+    return m
 
 
 class ParquetManifestIO:
     """Parquet data + atomic per-chunk JSON manifests under one root dir."""
 
     def __init__(self, root: str) -> None:
-        import threading
-
         self.root = pathlib.Path(root)
         self.data_dir = self.root / "data"
         self.manifest_dir = self.root / "_manifests"
@@ -50,17 +62,19 @@ class ParquetManifestIO:
 
     # -- resume state (A10) --
     def committed_buckets(self) -> set[int]:
-        out = set()
-        for p in self.manifest_dir.glob("bucket-*.json"):
-            try:
-                out.add(int(json.loads(p.read_text())["bucket"]))
-            except (ValueError, KeyError, TypeError, json.JSONDecodeError):
-                continue  # torn write never counts as committed
-        return out
+        return {m["bucket"] for m in self.manifests()}
 
     def bucket_manifest(self, bucket: int) -> dict[str, Any] | None:
-        p = self.manifest_dir / f"bucket-{bucket:05d}.json"
-        return json.loads(p.read_text()) if p.exists() else None
+        return _load_manifest(self._manifest_path(bucket))
+
+    def _manifest_path(self, bucket: int) -> pathlib.Path:
+        return self.manifest_dir / f"bucket-{bucket:05d}.json"
+
+    def _write_manifest(self, manifest: dict[str, Any]) -> None:
+        final = self._manifest_path(manifest["bucket"])
+        tmp = final.with_suffix(".json.tmp")
+        tmp.write_text(json.dumps(manifest, indent=1))
+        os.replace(tmp, final)  # atomic on POSIX: a manifest is all-or-nothing
 
     # -- commit protocol: data first, manifest last, manifest rename atomic --
     def _next_path(self, bucket: int) -> tuple[str, int]:
@@ -97,10 +111,7 @@ class ParquetManifestIO:
             "committed_at": time.time(),
             **(stats or {}),
         }
-        final = self.manifest_dir / f"bucket-{bucket:05d}.json"
-        tmp = final.with_suffix(".json.tmp")
-        tmp.write_text(json.dumps(manifest, indent=1))
-        os.replace(tmp, final)  # atomic on POSIX: a manifest is all-or-nothing
+        self._write_manifest(manifest)
         self._append_snapshot("append", bucket)
         return manifest
 
@@ -118,19 +129,10 @@ class ParquetManifestIO:
         return spark.read.parquet(*paths)
 
     def manifests(self) -> list[dict[str, Any]]:
-        # Same durability policy as committed_buckets(): a torn/corrupt
-        # manifest is "not committed" — skipped, never a crash. read()/
-        # compact/GC must not apply stricter semantics than resume does.
-        out = []
-        for p in self.manifest_dir.glob("bucket-*.json"):
-            try:
-                m = json.loads(p.read_text())
-                m["bucket"]  # noqa: B018 - key presence check
-                m["path"]
-            except (ValueError, KeyError, TypeError, json.JSONDecodeError):
-                continue  # torn write never counts as committed
-            out.append(m)
-        return sorted(out, key=lambda m: m["bucket"])
+        """Every committed manifest, by bucket — read(), resume, compaction
+        and GC all see the same set (``_load_manifest``)."""
+        loaded = (_load_manifest(p) for p in self.manifest_dir.glob("bucket-*.json"))
+        return sorted((m for m in loaded if m is not None), key=lambda m: m["bucket"])
 
     # -- maintenance: small-file compaction + orphan GC (the Iceberg
     # rewrite_data_files / expire_snapshots + remove_orphan_files pair) --
@@ -166,10 +168,7 @@ class ParquetManifestIO:
             "files_after": len(list(new_path.glob("*.parquet"))),
             "rows": int(obs.get["rows"]),
         }
-        final = self.manifest_dir / f"bucket-{bucket:05d}.json"
-        tmp = final.with_suffix(".json.tmp")
-        tmp.write_text(json.dumps(manifest, indent=1))
-        os.replace(tmp, final)  # readers atomically switch generations here
+        self._write_manifest(manifest)  # readers atomically switch generations here
         self._append_snapshot("replace", bucket)
         return manifest
 

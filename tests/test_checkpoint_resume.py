@@ -104,6 +104,52 @@ def test_torn_manifest_is_not_committed(tmp_path):
     assert io.committed_buckets() == set()
 
 
+def test_corrupt_manifest_is_recomputed_on_resume(spark, tmp_path):
+    """A corrupt manifest is "not committed" to resume AND to the commit
+    path: the resume recomputes that bucket and finishes with every row."""
+    inp = synth_transcripts_df(spark, 12)
+    io = ParquetManifestIO(str(tmp_path / "c"))
+    run_pipeline(inp, io, n_buckets=3, n_partitions=2, run_id="r1")
+    (io.manifest_dir / "bucket-00000.json").write_text('{"bucke')  # torn write
+    assert io.committed_buckets() == {1, 2}
+    resumed = run_pipeline(inp, io, n_buckets=3, n_partitions=2, run_id="r2")
+    assert [m["bucket"] for m in resumed] == [0]
+    assert io.committed_buckets() == {0, 1, 2}
+    assert io.read(spark).count() == inp.count()
+
+
+def test_pathless_manifest_is_not_committed(spark, tmp_path):
+    """A manifest without a data path is invisible to read(), so resume must
+    not count it either: the bucket is recomputed, no rows go missing."""
+    inp = synth_transcripts_df(spark, 12)
+    io = ParquetManifestIO(str(tmp_path / "p"))
+    run_pipeline(inp, io, n_buckets=3, n_partitions=2, run_id="r1")
+    (io.manifest_dir / "bucket-00001.json").write_text('{"bucket": 1}')
+    assert io.committed_buckets() == {0, 2}
+    assert io.bucket_manifest(1) is None
+    resumed = run_pipeline(inp, io, n_buckets=3, n_partitions=2, run_id="r2")
+    assert [m["bucket"] for m in resumed] == [1]
+    assert io.read(spark).count() == inp.count()
+
+
+def test_concurrent_chunks_keep_caller_job_group(spark, tmp_path):
+    """Chunk jobs submitted from pool threads run under the caller's Spark
+    local properties, so its job group (and scheduler pool) applies."""
+    sc = spark.sparkContext
+    group = "concurrent-chunks-group"
+    inp = synth_transcripts_df(spark, 12)
+    sc.setJobGroup(group, "concurrent chunks")
+    try:
+        run_pipeline(
+            inp, ParquetManifestIO(str(tmp_path / "g")), n_buckets=3, n_partitions=2, run_id="g", max_concurrent=2
+        )
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert len(jobs) >= 3, f"chunk jobs ran outside the caller's job group: {jobs}"
+
+
 def test_concurrent_chunks_equal_serial(spark, tmp_path):
     """max_concurrent>1 (driver threads submitting chunk jobs in parallel)
     must produce exactly the serial pipeline's output and manifests."""

@@ -8,6 +8,9 @@ exactly ONE exchange in the extract job.
 
 from __future__ import annotations
 
+import re
+
+import pytest
 from pyspark.sql import functions as F
 
 from ocrautomator_spark.queries import QUERIES
@@ -90,9 +93,25 @@ def test_extract_python_stage_reads_pruned_columns(spark):
     assert "junk" not in plan.split("MapInArrow")[1].split("Input")[0], "extra columns shipped to Python"
 
 
-def test_ann_topk_no_global_sort(spark):
-    plan = _plan(QUERIES["ann_cosine_topk"](spark, SF_DIR))
+@pytest.mark.parametrize(
+    "name",
+    [
+        "ann_cosine_topk",
+        "ann_lsh_topk",
+        "ann_lsh_multiprobe",
+        "ann_ivf_topk",
+        "ann_ivf_kmeans_topk",
+        "ann_quantized_topk",
+        "ann_pq_adc_topk",
+        "ann_pq_sampled_topk",
+    ],
+)
+def test_ann_topk_no_global_sort(spark, name):
+    """Every single-query top-k ends in TakeOrderedAndProject, never a
+    range-partitioned global sort of the corpus."""
+    plan = _plan(QUERIES[name](spark, SF_DIR))
     assert "TakeOrderedAndProject" in plan
+    assert "rangepartitioning" not in plan
 
 
 def test_salted_repartition_balances_skew(spark):
@@ -154,6 +173,33 @@ def test_substring_dedup_plans_have_no_quadratic_join(spark):
         plan = _plan(QUERIES[name](spark, SF_DIR))
         assert "BroadcastNestedLoopJoin" not in plan, name
         assert "Cartesian" not in plan, name
+
+
+def test_substring_windows_h_exchange_serves_every_consumer(spark):
+    """dedup_substring_windows: the pinned-count repartition on h is the only
+    exchange that hashes on h — the (doc_id, h) distinct, the DF guard and
+    both self-join sides add none of their own. The unexecuted plan carries
+    one identical copy of it per consumer subtree; run at sf0.001, AQE runs
+    two of them (the self-join's and the DF guard's under its broadcast)
+    and reuses the rest."""
+    plan = _plan(QUERIES["dedup_substring_windows"](spark, SF_DIR))
+    on_h = re.findall(r"Arguments: hashpartitioning\(h#\d+, (\d+)\), (\w+)", plan)
+    assert on_h, "no exchange on h"
+    assert {kind for _, kind in on_h} == {"REPARTITION_BY_NUM"}, on_h
+    assert len({n for n, _ in on_h}) == 1, on_h
+
+
+def test_substring_windows_rk_checkpoint_drops_k_partitioning(spark):
+    """dedup_substring_windows_rk repartitions on k before its
+    localCheckpoint so that the DF guard and both self-join sides would need
+    no re-shuffle. The plan does not show that: the checkpointed scan
+    reports UnknownPartitioning, and the consumers hash on k again
+    (ENSURE_REQUIREMENTS). This pins the shape as it is; a change that keeps
+    the checkpoint's partitioning must flip both assertions."""
+    plan = _plan(QUERIES["dedup_substring_windows_rk"](spark, SF_DIR))
+    assert "ExistingRDD, UnknownPartitioning(0)" in plan
+    on_k = re.findall(r"Arguments: hashpartitioning\(k#\d+L?, \d+\), (\w+)", plan)
+    assert on_k and set(on_k) == {"ENSURE_REQUIREMENTS"}, on_k
 
 
 def test_pq_adc_plan_shape(spark):
