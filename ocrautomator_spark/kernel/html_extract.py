@@ -224,6 +224,7 @@ def segment_html(raw: str) -> list[Block]:
     blk_memo_get = _BLK_MEMO.get
     pieces = raw.split("<")
     npieces = len(pieces)
+    next_gt = None
 
     i = 0
     p = pieces[0]
@@ -381,20 +382,19 @@ def segment_html(raw: str) -> list[Block]:
                 has_tag = False  # '<>' — generic, ignored
             continue
         # no '>' in this piece: the tag token extends to the first '>' in a
-        # LATER piece ([^>]* crosses '<'), or there is no tag at all
-        j = i
-        pj = p
-        pjstart = pstart
-        while True:
-            j += 1
-            if j >= npieces:
-                j = -1
-                break
-            pjstart += len(pj) + 1
-            pj = pieces[j]
-            g = pj.find(">")
-            if g >= 0:
-                break
+        # LATER piece ([^>]* crosses '<'), or there is no tag at all.
+        # next_gt[k] is the first piece after k holding a '>' (-1: none),
+        # built by one reverse pass the first time a piece lacks a '>', so a
+        # run of unterminated '<' costs linear time and well-formed markup
+        # never builds it
+        if next_gt is None:
+            next_gt = [-1] * npieces
+            nxt = -1
+            for k in range(npieces - 1, -1, -1):
+                next_gt[k] = nxt
+                if ">" in pieces[k]:
+                    nxt = k
+        j = next_gt[i]
         if j < 0:
             # no '>' anywhere later: the '<' is skipped (no token alternative
             # matches it), this piece is a bare text run, and every later
@@ -402,6 +402,11 @@ def segment_html(raw: str) -> list[Block]:
             has_tag = False
             toff = 0
             continue
+        pjstart = pstart
+        for k in range(i, j):
+            pjstart += len(pieces[k]) + 1
+        pj = pieces[j]
+        g = pj.find(">")
         # tag token spans pieces[i..j]; name/closing parse from the first
         # segment (name chars cannot cross a '<'), selfclosing from the
         # char right before the terminating '>'
@@ -463,7 +468,6 @@ def classify_blocks(blocks: list[Block]) -> list[Block]:
     # neighbor smoothing: a near block adjacent (ignoring headings) to a
     # content block on either side becomes content; 'lean' needs one side,
     # plain 'near' needs a content neighbor too but not between two boiler.
-    n = len(blocks)
     body = [b for b in blocks if b.kind != KIND_HEADING]
 
     def _neighbor_content(i: int, direction: int) -> bool:
@@ -501,5 +505,4 @@ def classify_blocks(blocks: list[Block]) -> list[Block]:
             window = blocks[i + 1 : i + 1 + HEADING_LOOKAHEAD]
             b.label = "content" if any(x.label == "content" for x in window) else "boilerplate"
 
-    _ = n  # document-order length retained for future windowed rules
     return [b for b in blocks if b.label == "content"]

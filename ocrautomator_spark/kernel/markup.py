@@ -18,7 +18,6 @@ from ocrautomator_spark.kernel.types import (
     Block,
 )
 
-_FENCE = re.compile(r"^```")
 _HEADING = re.compile(r"^(#{1,6})\s+(.*)$")
 _LIST_ITEM = re.compile(r"^(?:[-*+]|\d+\.)\s+(.*)$")
 
@@ -34,7 +33,10 @@ _CODE = re.compile(r"`([^`\n]*)`")
 def strip_inline(s: str) -> str:
     """Strip inline HTML tags and markdown emphasis/links to visible text."""
     if "<" in s:
-        s = _TAG.sub("", s)
+        # a '<' with no '>' after it starts no tag: substitute only up to the
+        # last '>', so a tail of unterminated '<' is not rescanned per '<'
+        g = s.rfind(">") + 1
+        s = _TAG.sub("", s[:g]) + s[g:]
     if "&" in s:
         s = _html.unescape(s)
     if "[" in s:
@@ -75,7 +77,7 @@ def extract_mixed(raw: str) -> list[Block]:
             para = []
 
     for s, e, ln, stripped in lines:
-        if stripped.startswith("```"):  # == _FENCE.match(stripped)
+        if stripped.startswith("```"):
             if in_fence:
                 if fence_lines:
                     code = "\n".join(f[2] for f in fence_lines)

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ocrautomator_spark.queries.common import q
+from ocrautomator_spark.queries.common import T, q
 from ocrautomator_spark.spark import conversation as conv
 from ocrautomator_spark.streaming import jobs as sj
 
@@ -203,7 +203,7 @@ def conv_span_profile(spark: SparkSession, sf: str) -> DataFrame:
     span and zero heading/code/list spans."""
     from ocrautomator_spark.spark.extract_job import documents_as_transcripts, run_extract
 
-    ext = run_extract(documents_as_transcripts(spark, sf))
+    ext = run_extract(documents_as_transcripts(T(spark, sf, "documents")))
     return conv.span_kind_profile(ext)
 
 

@@ -130,7 +130,7 @@ def streaming_dedup_incremental(
     from pyspark.sql.types import IntegerType, LongType, StringType, StructField, StructType
 
     from ocrautomator_spark.spark.tableio import ParquetManifestIO
-    from ocrautomator_spark.streaming.jobs import run_to_memory, stream_link_dir
+    from ocrautomator_spark.streaming.jobs import DOCUMENTS_SCHEMA, run_to_memory, stream_link_dir
 
     fp_of = lambda col: F.sha2(F.encode(col, "utf-8"), 256)  # noqa: E731
     scratch = store_root or tempfile.mkdtemp(prefix="ocras_incdedup_")
@@ -148,16 +148,7 @@ def streaming_dedup_incremental(
         stream_was_default = stream is None
         if stream is None:
             d = stream_link_dir(f"{sf}/documents.parquet", prefix="ocras_incstream")
-            schema = StructType(
-                [
-                    StructField("doc_id", LongType()),
-                    StructField("text", StringType()),
-                    StructField("lang", StringType()),
-                    StructField("source", StringType()),
-                    StructField("n_chars", LongType()),
-                ]
-            )
-            stream = spark.readStream.schema(schema).parquet(d)
+            stream = spark.readStream.schema(DOCUMENTS_SCHEMA).parquet(d)
         pfx = F.substring(F.md5(F.encode(F.col("doc_id").cast("string"), "utf-8")), 1, 1)
         s = stream.select("doc_id", "lang", "source", "text", pfx.alias("pfx"))
         inc = s.filter(F.col("pfx") >= INC_MIN).select(

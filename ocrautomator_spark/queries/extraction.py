@@ -16,8 +16,39 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ocrautomator_spark.kernel.extractor import EXTRACTOR_VERSION
-from ocrautomator_spark.queries.common import q
+from ocrautomator_spark.queries.common import T, q
 from ocrautomator_spark.spark.extract_job import documents_as_transcripts, flagship, run_extract
+from ocrautomator_spark.streaming.jobs import DOCUMENTS_SCHEMA, run_to_memory, stream_link_dir
+
+# extract_full and streaming_extract: the extracted rows of every document,
+# which the plain-text identity makes the document itself
+_EXTRACTED_ROWS_SQL = f"""
+    SELECT CAST(doc_id AS VARCHAR) AS conv_id,
+           CAST(0 AS INT) AS turn_idx,
+           'plain' AS payload_kind,
+           text AS extracted_text,
+           CAST(1 AS INT) AS n_spans,
+           '{EXTRACTOR_VERSION}' AS extractor_version,
+           CAST(length(text) AS INT) AS n_chars_in,
+           CAST(length(text) AS INT) AS n_chars_out
+    FROM documents
+    """
+
+
+def _extracted_rows(ext: DataFrame) -> DataFrame:
+    """The checked projection of an extracted table: keys + extracted text +
+    span count + lineage columns (nondeterministic lineage — partition id,
+    batch latency — excluded)."""
+    return ext.select(
+        "conv_id",
+        "turn_idx",
+        "payload_kind",
+        "extracted_text",
+        F.size("spans").alias("n_spans"),
+        "extractor_version",
+        "n_chars_in",
+        "n_chars_out",
+    )
 
 
 @q(
@@ -35,35 +66,10 @@ def extract_flagship(spark: SparkSession, sf: str) -> DataFrame:
     return flagship(spark, sf)
 
 
-@q(
-    "extract_full",
-    f"""
-    SELECT CAST(doc_id AS VARCHAR) AS conv_id,
-           CAST(0 AS INT) AS turn_idx,
-           'plain' AS payload_kind,
-           text AS extracted_text,
-           CAST(1 AS INT) AS n_spans,
-           '{EXTRACTOR_VERSION}' AS extractor_version,
-           CAST(length(text) AS INT) AS n_chars_in,
-           CAST(length(text) AS INT) AS n_chars_out
-    FROM documents
-    """,
-)
+@q("extract_full", _EXTRACTED_ROWS_SQL)
 def extract_full(spark: SparkSession, sf: str) -> DataFrame:
-    """Full extracted table over documents-as-transcripts: keys + extracted
-    text + spans + lineage columns (nondeterministic lineage — partition id,
-    batch latency — excluded from the checked projection)."""
-    ext = run_extract(documents_as_transcripts(spark, sf))
-    return ext.select(
-        "conv_id",
-        "turn_idx",
-        "payload_kind",
-        "extracted_text",
-        F.size("spans").alias("n_spans"),
-        "extractor_version",
-        "n_chars_in",
-        "n_chars_out",
-    )
+    """Full extracted table over documents-as-transcripts."""
+    return _extracted_rows(run_extract(documents_as_transcripts(T(spark, sf, "documents"))))
 
 
 MIN_PIPE_WORDS = 8  # quality gate of the composed pipeline
@@ -96,7 +102,7 @@ def pipeline_e2e(spark: SparkSession, sf: str) -> DataFrame:
     corpus rollup. One extraction pass, one dedup shuffle on a fixed-width
     key, one agg — the shape a 100 TB corpus build actually runs. Oracled
     exactly via the plain-text identity."""
-    ext = run_extract(documents_as_transcripts(spark, sf), passthrough=["lang"])
+    ext = run_extract(documents_as_transcripts(T(spark, sf, "documents")), passthrough=["lang"])
     kept = ext.filter(F.size(F.split("extracted_text", " ")) >= MIN_PIPE_WORDS)
     ded = kept.groupBy(F.sha2(F.encode("extracted_text", "utf-8"), 256).alias("_k")).agg(
         F.min("conv_id").alias("keeper"),
@@ -109,75 +115,22 @@ def pipeline_e2e(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@q(
-    "streaming_extract",
-    f"""
-    SELECT CAST(doc_id AS VARCHAR) AS conv_id,
-           CAST(0 AS INT) AS turn_idx,
-           'plain' AS payload_kind,
-           text AS extracted_text,
-           CAST(1 AS INT) AS n_spans,
-           '{EXTRACTOR_VERSION}' AS extractor_version,
-           CAST(length(text) AS INT) AS n_chars_in,
-           CAST(length(text) AS INT) AS n_chars_out
-    FROM documents
-    """,
-)
+@q("streaming_extract", _EXTRACTED_ROWS_SQL)
 def streaming_extract(spark: SparkSession, sf: str) -> DataFrame:
     """Continuous extraction: documents arrive as files on a readStream, flow
     through the SAME salted-repartition → mapInArrow kernel spine micro-batch
     by micro-batch (``run_extract`` on a streaming frame), and append to the
     sink. Hash-oracled via the plain-text identity — a REAL Structured
     Streaming execution gated on exact equality with batch SQL."""
-    from ocrautomator_spark.streaming.jobs import run_to_memory
-
     d = _symlink_dir(sf, ["documents.parquet"])
-    sdf = spark.readStream.schema(_doc_schema()).parquet(d)
-    tdf = sdf.select(
-        F.col("doc_id").cast("string").alias("conv_id"),
-        F.lit(0).cast("int").alias("turn_idx"),
-        F.lit("user").alias("role"),
-        F.col("text"),
-        F.lit(None).cast("string").alias("tool"),
-        F.lit("2025-01-01 00:00:00").cast("timestamp").alias("ts"),
-    )
-    ext = run_extract(tdf)
-    return run_to_memory(
-        ext,
-        "append",
-        lambda df: df.select(
-            "conv_id",
-            "turn_idx",
-            "payload_kind",
-            "extracted_text",
-            F.size("spans").alias("n_spans"),
-            "extractor_version",
-            "n_chars_in",
-            "n_chars_out",
-        ),
-    )
+    sdf = spark.readStream.schema(DOCUMENTS_SCHEMA).parquet(d)
+    return run_to_memory(run_extract(documents_as_transcripts(sdf)), "append", _extracted_rows)
 
 
 def _symlink_dir(sf: str, names: list[str]) -> str:
     """Docs-stream dir: sf/documents.parquet exposed under the given link
     names (multiple links make the corpus 'arrive' that many times)."""
-    from ocrautomator_spark.streaming.jobs import stream_link_dir
-
     return stream_link_dir(f"{sf}/documents.parquet", names, prefix="ocras_docstream")
-
-
-def _doc_schema():
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    return StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("text", StringType()),
-            StructField("lang", StringType()),
-            StructField("source", StringType()),
-            StructField("n_chars", LongType()),
-        ]
-    )
 
 
 @q(
@@ -195,10 +148,8 @@ def streaming_dedup_docs(spark: SparkSession, sf: str) -> DataFrame:
     must equal batch COUNT(DISTINCT sha256(text)): without working stateful
     dedup the result would be 2×. On a real cluster this is the continuous
     ingest-side dedup in front of the extract pipeline."""
-    from ocrautomator_spark.streaming.jobs import run_to_memory
-
     d = _symlink_dir(sf, ["copy1.parquet", "copy2.parquet"])
-    sdf = spark.readStream.schema(_doc_schema()).parquet(d)
+    sdf = spark.readStream.schema(DOCUMENTS_SCHEMA).parquet(d)
     deduped = sdf.select(
         "doc_id", F.sha2(F.encode("text", "utf-8"), 256).alias("k")
     ).dropDuplicates(["k"])
@@ -222,7 +173,7 @@ def streaming_dedup_docs(spark: SparkSession, sf: str) -> DataFrame:
     """,
 )
 def extract_span_stats(spark: SparkSession, sf: str) -> DataFrame:
-    ext = run_extract(documents_as_transcripts(spark, sf))
+    ext = run_extract(documents_as_transcripts(T(spark, sf, "documents")))
     return (
         ext.select("conv_id", F.explode("spans").alias("s"))
         .groupBy(F.col("s.kind").alias("kind"))

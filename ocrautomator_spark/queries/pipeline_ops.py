@@ -614,13 +614,16 @@ def _shared_window_pairs(sel: DataFrame, key: str) -> DataFrame:
     """Pair tail of both pair views: (doc_id, ``key``) sampled window keys →
     MAX_DF stop-window guard → ``key``-equi self-join → doc pairs sharing
     >= SUBSTR_MIN_SHARED windows. ``key`` is the md5 ``h`` or the rolling
-    ``k``."""
-    keep = (
-        sel.groupBy(key).agg(F.count("*").alias("df"))
+    ``k``. ``sel`` is unique on (doc_id, ``key``), so the window count over
+    ``key`` is the key's document frequency; the window clusters by ``key``
+    like the self-join, so the guard adds no exchange of its own."""
+    from pyspark.sql.window import Window
+
+    sk = (
+        sel.withColumn("df", F.count("*").over(Window.partitionBy(key)))
         .filter(F.col("df") <= MAX_DF)
-        .select(key)
+        .drop("df")
     )
-    sk = sel.join(keep, key)
     a, b = sk.alias("a"), sk.alias("b")
     return (
         a.join(b, (F.col(f"a.{key}") == F.col(f"b.{key}")) & (F.col("a.doc_id") < F.col("b.doc_id")))
@@ -748,11 +751,10 @@ def dedup_substring_windows(spark: SparkSession, sf: str) -> DataFrame:
     )
     # ONE exchange serves the whole candidate pipeline (r7): hashpartitioning
     # on h alone satisfies the (doc_id, h) distinct's clustering (a subset of
-    # the grouping keys), the DF-guard's groupBy(h), AND both sides of the
-    # h-equi self-join — the unkeyed distinct used to force its own
-    # (doc_id, h) exchange plus a second one per h-keyed consumer. Pinned
-    # count so AQE cannot fold the compute-heavy join stage onto one core.
-    # Measured 2.9-3.2s -> 2.0-2.3s at sf0.1, identical pair set.
+    # the grouping keys), the DF guard's window over h, AND both sides of
+    # the h-equi self-join, so the md5 scan runs in one shuffle stage and
+    # the second join side reuses it. Pinned count so AQE cannot fold the
+    # compute-heavy join stage onto one core.
     sel = (
         wins.repartition(wins.sparkSession.sparkContext.defaultParallelism, "h")
         .distinct()
@@ -1042,23 +1044,10 @@ def dedup_substring_windows_rk(spark: SparkSession, sf: str) -> DataFrame:
     recall vs passage length) is separately pinned against an exact
     driver-side ground truth by tests/test_substring_ground_truth.py."""
     # rk_keys emits np.unique keys per doc, so (doc_id, k) is unique by
-    # construction and needs no distinct — but the scan DOES need a
-    # materialization barrier: three consumers (DF-guard, both self-join
-    # sides) would otherwise re-run the pandas-UDF scan 3x (the r4
-    # .distinct() was accidentally serving as a reused exchange; measured
-    # 6.7s vs 3.1s without a barrier at sf0.1). localCheckpoint is the
-    # established idiom (see dedup_minhash banding). r7: repartition on k
-    # BEFORE the barrier (measured 2.3-2.6s -> 1.6-1.7s at sf0.1, identical
-    # pair set), meant to let the DF-guard and both self-join sides reuse
-    # the checkpoint's partitioning. The plan does not show that: the
-    # checkpointed scan reports UnknownPartitioning and the consumers hash
-    # on k again (pinned in tests/test_physical_plans.py).
-    sel = (
-        _rk_sampled_keys(spark, sf)
-        .repartition(spark.sparkContext.defaultParallelism, "k")
-        .localCheckpoint()
-    )
-    return _shared_window_pairs(sel, "k")
+    # construction and needs no distinct. The DF guard's window is the
+    # sample's only consumer and both self-join sides reuse its exchange on
+    # k, so the pandas-UDF scan runs once without a materialization barrier.
+    return _shared_window_pairs(_rk_sampled_keys(spark, sf), "k")
 
 
 # shared SQL suffix: matched RK-sampled windows (doc_id, i) — the rolling-

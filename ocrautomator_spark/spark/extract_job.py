@@ -157,10 +157,10 @@ def run_extract(
     return parts.mapInArrow(extract_batches, schema=schema)
 
 
-def documents_as_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Adapt the driver's ``documents`` table to the transcripts input shape
-    (one doc = a single-turn conversation), keeping lang/source as passthrough."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+def documents_as_transcripts(docs: DataFrame) -> DataFrame:
+    """Adapt a frame of the ``documents`` table, batch or stream, to the
+    transcripts input shape (one doc = a single-turn conversation), keeping
+    lang/source as passthrough."""
     return docs.select(
         F.col("doc_id").cast("string").alias("conv_id"),
         F.lit(0).cast("int").alias("turn_idx"),
@@ -176,7 +176,8 @@ def documents_as_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship query (driver smoke): extraction kernel over ``documents`` +
     an agg_hash rollup by (lang, payload_kind). Stable schema, rows > 0."""
-    ext = run_extract(documents_as_transcripts(spark, sf_dir), passthrough=["lang", "source"])
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    ext = run_extract(documents_as_transcripts(docs), passthrough=["lang", "source"])
     return (
         ext.groupBy("lang", "payload_kind")
         .agg(

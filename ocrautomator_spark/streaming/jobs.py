@@ -42,6 +42,17 @@ EVENTS_SCHEMA = StructType(
     ]
 )
 
+# the documents table, for file-source streams over documents.parquet
+DOCUMENTS_SCHEMA = StructType(
+    [
+        StructField("doc_id", LongType(), True),
+        StructField("text", StringType(), True),
+        StructField("lang", StringType(), True),
+        StructField("source", StringType(), True),
+        StructField("n_chars", LongType(), True),
+    ]
+)
+
 
 def stream_link_dir(src_file: str, names: list[str] | None = None, prefix: str = "ocras_stream") -> str:
     """The file streaming source requires a DIRECTORY; expose a single

@@ -29,6 +29,53 @@ def _plan(df) -> str:
     return buf.getvalue()
 
 
+def _final_plan(df) -> str:
+    """Run ``df`` and return AQE's final physical plan, one node per line
+    with its arguments — the plan that actually ran, after stage reuse and
+    re-optimization."""
+    df.collect()
+    adaptive = df._jdf.queryExecution().executedPlan()
+    assert adaptive.isFinalPlan()
+    return adaptive.executedPlan().toString()
+
+
+def _tree(plan: str) -> list[tuple[int, str]]:
+    """(depth, node) per line of a plan tree string."""
+    rows = []
+    for line in plan.splitlines():
+        node = line.lstrip(" :+-")
+        if node:
+            rows.append((len(line) - len(node), node))
+    return rows
+
+
+def _stage_of(plan: str) -> list[tuple[str, str]]:
+    """(enclosing query stage, node) per node of a final plan: the stage is
+    the nearest ancestor ``*QueryStage`` line, or "" above every stage."""
+    out, stack = [], []
+    for depth, node in _tree(plan):
+        while stack and stack[-1][0] >= depth:
+            stack.pop()
+        stages = [n for _, n in stack if "QueryStage" in n.split(" ")[0]]
+        out.append((stages[-1] if stages else "", node))
+        stack.append((depth, node))
+    return out
+
+
+def _subtree(plan: str, head: str) -> list[str]:
+    """Nodes strictly below the first node that starts with ``head``."""
+    rows = _tree(plan)
+    for j, (depth, node) in enumerate(rows):
+        if node.startswith(head):
+            below = []
+            for d, n in rows[j + 1:]:
+                if d <= depth:
+                    break
+                below.append(n)
+            return below
+    raise AssertionError(f"no {head} in plan")
+
+
 def test_filter_pushdown_reaches_scan(spark):
     plan = _plan(QUERIES["filter_pred"](spark, SF_DIR))
     assert "PushedFilters: [" in plan
@@ -177,29 +224,37 @@ def test_substring_dedup_plans_have_no_quadratic_join(spark):
 
 def test_substring_windows_h_exchange_serves_every_consumer(spark):
     """dedup_substring_windows: the pinned-count repartition on h is the only
-    exchange that hashes on h — the (doc_id, h) distinct, the DF guard and
-    both self-join sides add none of their own. The unexecuted plan carries
-    one identical copy of it per consumer subtree; run at sf0.001, AQE runs
-    two of them (the self-join's and the DF guard's under its broadcast)
-    and reuses the rest."""
-    plan = _plan(QUERIES["dedup_substring_windows"](spark, SF_DIR))
+    exchange that hashes on h — the (doc_id, h) distinct, the DF guard's
+    window and both self-join sides add none of their own. Run at sf0.001,
+    the md5 window scan (the Generate) runs in ONE shuffle stage; the
+    second self-join side reads it as a ReusedExchange, and the guard has
+    no aggregate, join or broadcast of its own."""
+    df = QUERIES["dedup_substring_windows"](spark, SF_DIR)
+    plan = _plan(df)
     on_h = re.findall(r"Arguments: hashpartitioning\(h#\d+, (\d+)\), (\w+)", plan)
     assert on_h, "no exchange on h"
     assert {kind for _, kind in on_h} == {"REPARTITION_BY_NUM"}, on_h
     assert len({n for n, _ in on_h}) == 1, on_h
 
+    final = _final_plan(df)
+    gen_stages = [st for st, node in _stage_of(final) if re.match(r"(\*\(\d+\) )?Generate ", node)]
+    assert len(gen_stages) == 1 and gen_stages[0].startswith("ShuffleQueryStage"), gen_stages
+    assert re.search(r"ReusedExchange .*Exchange hashpartitioning\(h#", final), final
+    assert not re.search(r"HashAggregate\(keys=\[h#", final), "DF guard aggregates on h"
+    assert len(re.findall(r"(SortMerge|BroadcastHash|ShuffledHash)Join ", final)) == 1, final
+    assert final.count("BroadcastExchange ") <= 1, final
 
-def test_substring_windows_rk_checkpoint_drops_k_partitioning(spark):
-    """dedup_substring_windows_rk repartitions on k before its
-    localCheckpoint so that the DF guard and both self-join sides would need
-    no re-shuffle. The plan does not show that: the checkpointed scan
-    reports UnknownPartitioning, and the consumers hash on k again
-    (ENSURE_REQUIREMENTS). This pins the shape as it is; a change that keeps
-    the checkpoint's partitioning must flip both assertions."""
-    plan = _plan(QUERIES["dedup_substring_windows_rk"](spark, SF_DIR))
-    assert "ExistingRDD, UnknownPartitioning(0)" in plan
-    on_k = re.findall(r"Arguments: hashpartitioning\(k#\d+L?, \d+\), (\w+)", plan)
-    assert on_k and set(on_k) == {"ENSURE_REQUIREMENTS"}, on_k
+
+def test_substring_windows_rk_scan_runs_once(spark):
+    """dedup_substring_windows_rk needs no materialization barrier: the DF
+    guard's window is the sampled keys' only consumer, so the pandas-UDF
+    scan runs once, in front of one exchange on k, and the second self-join
+    side reads that exchange as a ReusedExchange."""
+    final = _final_plan(QUERIES["dedup_substring_windows_rk"](spark, SF_DIR))
+    assert "ExistingRDD" not in final
+    assert final.count("ArrowEvalPython ") == 1, final
+    on_k = re.findall(r"(ReusedExchange .*)?Exchange hashpartitioning\(k#\d+L?, \d+\)", final)
+    assert sorted(bool(r) for r in on_k) == [False, True], on_k
 
 
 def test_pq_adc_plan_shape(spark):
@@ -228,11 +283,18 @@ def test_range_join_is_binned_equi_join(spark):
     key — never the BroadcastNestedLoopJoin a raw interval predicate
     produces — with the exact range re-filter applied post-join."""
 
-    plan = _plan(QUERIES["join_range_binned"](spark, SF_DIR))
+    df = QUERIES["join_range_binned"](spark, SF_DIR)
+    plan = _plan(df)
     assert "BroadcastNestedLoopJoin" not in plan
     assert "Cartesian" not in plan
     # partial aggregation before the final group-by exchange
     assert "partial_" in plan
+    # the interval side is broadcast: no shuffle under the build, neither
+    # planned nor run
+    planned = df._jdf.queryExecution().executedPlan().toString()
+    for tree in (planned, _final_plan(df)):
+        below = _subtree(tree, "BroadcastExchange ")
+        assert not [n for n in below if "Exchange " in n], below
 
 
 def test_pagerank_plan_shape(spark):
