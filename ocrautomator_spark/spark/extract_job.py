@@ -115,9 +115,12 @@ def _output_schema(df: DataFrame, passthrough: list[str]) -> StructType:
 def extract_partitions(df: DataFrame) -> int:
     """Default partition count for the Python stage over ``df``: one task per
     core (``defaultParallelism``). Each mapInArrow task pays a fixed
-    Python-worker start (0.15-0.2 s per task per core, measured on a 4-core
-    box), so cutting an input into the shuffle-partitions conf (4x cores)
-    spent more time starting tasks than extracting. A stream keeps
+    Python-worker cost before any row moves: about 0.25 s per task per core
+    on workers that import pyspark from Spark's pyspark.zip, about 0.03 s on
+    the site-packages workers ``get_spark`` starts in local mode (identity
+    mapInArrow over 80k cached rows, 8 vs 32 tasks, local[2] on a 4-core
+    box). Cutting an input into the shuffle-partitions conf (4x cores) pays
+    that cost four times over. A stream keeps
     ``spark.sql.shuffle.partitions``."""
     spark = df.sparkSession
     if df.isStreaming:

@@ -45,8 +45,16 @@ def _run_chunk(with_bucket: DataFrame, io: ParquetManifestIO, b: int, n_partitio
         F.avg("batch_latency_ms").alias("avg_batch_latency_ms"),
         F.sum(F.when(F.col("payload_kind") == "error", 1).otherwise(0)).alias("errors"),
     )
+    # the chunk's jobs carry run_pipeline:<run_id>:b<b>; the caller's
+    # description comes back after
+    sc = chunk.sparkSession.sparkContext
+    prior = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(f"run_pipeline:{run_id}:b{b}")
     t0 = time.perf_counter()
-    io.write_bucket_data(ext, b)                # the action; fills the observation
+    try:
+        io.write_bucket_data(ext, b)            # the action; fills the observation
+    finally:
+        sc.setJobDescription(prior)
     wall = time.perf_counter() - t0
     stats = {
         k: (v if v is None else (int(v) if k in ("rows", "chars_in", "chars_out", "errors") else float(v)))

@@ -10,16 +10,21 @@ Python worker, UTC session timezone for deterministic timestamp semantics.
 from __future__ import annotations
 
 import os
+import site
 
 from pyspark.sql import SparkSession
+
+import ocrautomator_spark
+from ocrautomator_spark.spark import worker_daemon
 
 # Rows per Arrow batch into a Python worker (every mapInArrow, mapInPandas
 # and pandas_udf in the session). The extract job runs one mapInArrow task
 # per core (extract_partitions), so each worker streams its whole share of a
 # chunk, and its peak memory grows with the batch size. Peak Python PSS of
-# the 80 000-turn perfbench backfill at local[2] on a 4-core box: 285 MB at
-# 2048 rows, 299-302 MB at 4096, 317-322 MB at 10 000, walls the same within
-# run-to-run noise. The Arrow/pandas headline queries (pipeline_e2e,
+# the 80 000-turn perfbench backfill at local[2] on a 4-core box, workers on
+# the zip-free daemon: 235-237 MB at 2048 rows (20 runs), 248-249 MB at 4096,
+# 271-272 MB at 10 000 (2 runs each), walls 2.3-2.9 s at 2048 and 4096 and
+# 2.7-3.1 s at 10 000. The Arrow/pandas headline queries (pipeline_e2e,
 # extract_flagship, dedup_substring_windows_rk) were as fast or faster at
 # 2048 as at 10 000 rows on sf 0.05 and sf 0.4 tables.
 ARROW_BATCH_ROWS = 2048
@@ -47,9 +52,45 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
+    if worker_daemon_reachable(
+        master,
+        package_parent=os.path.dirname(os.path.dirname(os.path.abspath(ocrautomator_spark.__file__))),
+        cwd=os.getcwd(),
+        site_dirs=site.getsitepackages() + [site.getusersitepackages()],
+        pythonpath=os.environ.get("PYTHONPATH", ""),
+        via_submit="PYSPARK_GATEWAY_PORT" in os.environ,
+    ):
+        b = b.config("spark.python.daemon.module", worker_daemon.__name__)
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def worker_daemon_reachable(
+    master: str,
+    package_parent: str,
+    cwd: str,
+    site_dirs: list[str],
+    pythonpath: str,
+    via_submit: bool,
+) -> bool:
+    """Whether Python workers can import ``worker_daemon`` when they start:
+    a daemon that cannot import its module fails every Python stage. Only a
+    ``local[...]`` master qualifies (a cluster executor may lack the package
+    and site-packages pyspark). The daemon runs as ``python -m`` in the JVM's
+    cwd with the JVM's ``PYTHONPATH``, so the package's parent directory must
+    be the cwd, a site-packages dir, or on the ``PYTHONPATH`` a JVM launched
+    from here inherits. Under spark-submit (``via_submit``) the JVM was
+    started before this process, with an environment it cannot see, and the
+    package may come from ``--py-files``, which workers only add per task:
+    then only the cwd counts."""
+    if not master.startswith("local["):
+        return False
+    parent = os.path.realpath(package_parent)
+    dirs = [cwd]
+    if not via_submit:
+        dirs += site_dirs + [p for p in pythonpath.split(os.pathsep) if p]
+    return any(os.path.realpath(d) == parent for d in dirs)
 
 
 def _master_cores(master: str, default: int) -> int:

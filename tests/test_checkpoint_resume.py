@@ -150,6 +150,38 @@ def test_concurrent_chunks_keep_caller_job_group(spark, tmp_path):
     assert len(jobs) >= 3, f"chunk jobs ran outside the caller's job group: {jobs}"
 
 
+class _DescriptionIO(ParquetManifestIO):
+    """Records the job description each chunk's data write runs under."""
+
+    def __init__(self, root: str, spark) -> None:
+        super().__init__(root)
+        self.sc = spark.sparkContext
+        self.seen: dict[int, str | None] = {}
+
+    def write_bucket_data(self, df, bucket: int) -> str:
+        self.seen[bucket] = self.sc.getLocalProperty("spark.job.description")
+        return super().write_bucket_data(df, bucket)
+
+
+@pytest.mark.parametrize("max_concurrent", [1, 2])
+def test_chunk_jobs_are_labelled(spark, tmp_path, max_concurrent):
+    """Each chunk's jobs run under ``run_pipeline:<run_id>:b<bucket>``, on the
+    serial and the concurrent path, and the caller's description is back
+    afterwards."""
+    sc = spark.sparkContext
+    io = _DescriptionIO(str(tmp_path / "lbl"), spark)
+    sc.setJobDescription("caller")
+    try:
+        run_pipeline(
+            synth_transcripts_df(spark, 12), io, n_buckets=3, n_partitions=2, run_id="lbl", max_concurrent=max_concurrent
+        )
+        after = sc.getLocalProperty("spark.job.description")
+    finally:
+        sc.setJobDescription(None)
+    assert io.seen == {b: f"run_pipeline:lbl:b{b}" for b in range(3)}
+    assert after == "caller"
+
+
 def test_concurrent_chunks_equal_serial(spark, tmp_path):
     """max_concurrent>1 (driver threads submitting chunk jobs in parallel)
     must produce exactly the serial pipeline's output and manifests."""
