@@ -1,10 +1,12 @@
 """E1+E8 — kernel entry point: dispatch by payload kind, assemble output.
 
 ``extract_one`` is the sequential reference implementation for the per-turn
-equality invariant (BASELINE.json:15): the Spark job runs exactly this
-function inside batched Arrow/pandas UDFs, so equality of the distributed run
-is by construction for the kernel, and tests target what distribution can
-break (partitioning, ordering, batching, resume) — SURVEY.md §2E.
+equality invariant (BASELINE.json:15). The Spark job runs this function
+inside batched Arrow UDFs, except for single-line ASCII plain turns, which
+``spark/extract_job.py`` extracts in Arrow compute; the differential test in
+tests/test_extract_job.py holds the batched result equal to ``extract_one``
+row for row. Other tests target what distribution can break (partitioning,
+ordering, batching, resume) — SURVEY.md §2E.
 
 Total over arbitrary strings: never raises; unprocessable input degrades to
 an empty result, mirroring the reference's skip-and-continue error channel

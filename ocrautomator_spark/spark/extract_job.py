@@ -12,7 +12,11 @@ Spark lifecycle (§3.2), one Python crossing total:
                                             per-document worker loop; Arrow-native,
                                             no pandas boxing — passthrough columns
                                             cross zero-copy, spans are built as
-                                            vectorized ListArray/StructArray)
+                                            vectorized ListArray/StructArray;
+                                            single-line ASCII plain turns, most
+                                            chat turns, never reach per-row
+                                            Python: Arrow compute extracts them,
+                                            extract_one the rest)
       → sortWithinPartitions(conv_id, turn_idx)   (A7: stable turn ordering)
       → [caller writes + commits manifest]  (A8/A10, see spark/pipeline.py +
                                             spark/tableio.py ParquetManifestIO)
@@ -39,6 +43,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ocrautomator_spark.kernel.extractor import EXTRACTOR_VERSION, extract_one
+from ocrautomator_spark.kernel.types import KIND_CONTENT, PK_PLAIN
 from ocrautomator_spark.spark.schemas import EXTRACT_FIELDS, EXTRACT_KEY_COLS, TRANSCRIPTS
 
 # A long conversation is spread over up to SALT_BUCKETS partitions; extraction
@@ -52,14 +57,111 @@ _SPAN_TYPE = pa.struct(
         pa.field("kind", pa.string(), False),
     ]
 )
+_RESULT_NAMES = ["extracted_text", "spans", "payload_kind"]
+# one run of the ASCII characters that str.split() splits on
+_ASCII_WS_RUN = r"[\t\n\x0b\x0c\r\x1c-\x1f ]+"
+
+
+def _plain_single_block(text: pa.Array) -> pa.Array:
+    """True where ``extract_one`` provably sniffs the row as plain and
+    ``extract_plain`` makes one block of it, so its result is
+    ``" ".join(text.split())`` with one span over the whole row. Nulls are
+    false (``extract_one`` reports them as errors). Each clause stands for
+    the ``sniff`` rules (kernel/sniff.py) it rules out:
+
+    * ASCII: ``str.split`` whitespace is then exactly ``_ASCII_WS_RUN``, NFC
+      is the identity, and no non-ASCII char folds onto a regex letter;
+    * no ``<``: HTML and the has-``<`` mixed rule both need one;
+    * no newline: markdown needs at least 2 line-start signals, and on one
+      line heading, fence and list can only match at position 0, and only
+      one of them can match there; one line also fails the PDF ``-\\n`` and
+      at-least-4-lines rules and makes ``extract_plain`` one paragraph;
+    * no ``\\f`` and no case-insensitive ``page``: the other PDF rules
+      (form feed, page-marker line).
+    """
+    ok = pc.string_is_ascii(text)
+    for pattern in ("<", "\n", "\f"):
+        ok = pc.and_(ok, pc.invert(pc.match_substring(text, pattern)))
+    ok = pc.and_(ok, pc.invert(pc.match_substring(text, "page", ignore_case=True)))
+    return pc.fill_null(ok, False)
+
+
+def _span_lists(offsets: pa.Array, starts, ends, kinds) -> pa.ListArray:
+    structs = pa.StructArray.from_arrays(
+        [pa.array(starts, pa.int32()), pa.array(ends, pa.int32()), pa.array(kinds, pa.string())],
+        fields=list(_SPAN_TYPE),
+    )
+    return pa.ListArray.from_arrays(offsets, structs)
+
+
+def _extract_plain_rows(text: pa.Array) -> pa.StructArray:
+    """(extracted_text, spans, payload_kind) of rows that pass
+    ``_plain_single_block``, in Arrow compute: whitespace runs become one
+    space, the ends are trimmed, and a non-empty result gets the span
+    ``(0, len(text), "content")``. A whitespace-only row gets no span, as
+    ``extract_one``'s early return gives it."""
+    extracted = pc.utf8_trim(pc.replace_substring_regex(text, _ASCII_WS_RUN, " "), " ")
+    has_span = pc.greater(pc.binary_length(extracted), 0)
+    ends = pc.filter(pc.cast(pc.utf8_length(text), pa.int32()), has_span)
+    n_spans = len(ends)
+    offsets = pa.concat_arrays(
+        [pa.array([0], pa.int32()), pc.cumulative_sum(pc.cast(has_span, pa.int32()))]
+    )
+    spans = _span_lists(
+        offsets,
+        pa.repeat(pa.scalar(0, pa.int32()), n_spans),
+        ends,
+        pa.repeat(pa.scalar(KIND_CONTENT), n_spans),
+    )
+    kinds = pa.repeat(pa.scalar(PK_PLAIN), len(text))
+    return pa.StructArray.from_arrays([extracted, spans, kinds], names=_RESULT_NAMES)
+
+
+def _extract_rows(text: pa.Array) -> pa.StructArray:
+    """(extracted_text, spans, payload_kind) of any rows, ``extract_one``
+    per row. ExtractResult and Span are NamedTuples, so zip(*...) unzips the
+    whole batch at C speed — no per-row/per-span Python append loops."""
+    results = [extract_one(t) for t in text.to_pylist()]
+    ext_texts, span_lists, pks = zip(*results) if results else ((), (), ())
+    flat_spans = [s for spans in span_lists for s in spans]
+    starts, ends, kinds = zip(*flat_spans) if flat_spans else ((), (), ())
+    offsets = pa.array(list(accumulate(map(len, span_lists), initial=0)), pa.int32())
+    return pa.StructArray.from_arrays(
+        [pa.array(ext_texts, pa.string()), _span_lists(offsets, starts, ends, kinds), pa.array(pks, pa.string())],
+        names=_RESULT_NAMES,
+    )
+
+
+def _extract_column(text: pa.Array) -> pa.StructArray:
+    """Rows that pass ``_plain_single_block`` go through Arrow compute, the
+    rest through ``extract_one``; the two result sets are put back in input
+    order with one ``take``."""
+    fast = _plain_single_block(text)
+    n_fast = pc.sum(fast).as_py() or 0
+    if n_fast == len(text):
+        return _extract_plain_rows(text)
+    if n_fast == 0:
+        return _extract_rows(text)
+    both = pa.concat_arrays(
+        [_extract_plain_rows(pc.filter(text, fast)), _extract_rows(pc.filter(text, pc.invert(fast)))]
+    )
+    # row i is the k-th fast row (k = fast rows up to i, 1-based) or the k-th
+    # slow row, so it sits at k-1 or n_fast+k-1 in fast ++ slow
+    nth_fast = pc.cumulative_sum(pc.cast(fast, pa.int32()))
+    nth_slow = pc.cumulative_sum(pc.cast(pc.invert(fast), pa.int32()))
+    where = pc.subtract(pc.if_else(fast, nth_fast, pc.add(nth_slow, n_fast)), 1)
+    return both.take(where)
 
 
 def extract_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    """Arrow-batched extraction: one Python crossing, kernel applied per row
-    within the batch (string-at-a-time like Tesseract was document-at-a-time,
-    but batching amortizes transfer + interpreter overhead and all pre/post
-    processing stays JVM-side). Output spans are assembled as flat Arrow
-    child arrays + offsets — no per-row Python dicts cross the boundary."""
+    """Arrow-batched extraction: one Python crossing per batch. Single-line
+    ASCII plain rows are extracted in Arrow compute; every other row runs
+    the kernel's ``extract_one`` (string-at-a-time like Tesseract was
+    document-at-a-time, but batching amortizes transfer + interpreter
+    overhead and all pre/post processing stays JVM-side). Output spans are
+    assembled as flat Arrow child arrays + offsets — no per-row Python dicts
+    cross the boundary. tests/test_extract_job.py checks the result equals
+    ``extract_one`` row for row."""
     from pyspark import TaskContext
 
     tc = TaskContext.get()
@@ -67,34 +169,16 @@ def extract_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatc
     for rb in batches:
         t0 = time.perf_counter()
         text_idx = rb.schema.get_field_index("text")
-        texts = rb.column(text_idx).to_pylist()
-        results = [extract_one(t) for t in texts]
-
-        # ExtractResult and Span are NamedTuples, so zip(*...) unzips the
-        # whole batch at C speed — no per-row/per-span Python append loops.
-        ext_texts, span_lists, pks = zip(*results) if results else ((), (), ())
-        flat_spans = [s for spans in span_lists for s in spans]
-        if flat_spans:
-            starts, ends, kinds = zip(*flat_spans)
-        else:
-            starts = ends = kinds = ()
-        offsets = list(accumulate(map(len, span_lists), initial=0))
-        span_structs = pa.StructArray.from_arrays(
-            [pa.array(starts, pa.int32()), pa.array(ends, pa.int32()), pa.array(kinds, pa.string())],
-            fields=list(_SPAN_TYPE),
-        )
-        spans = pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), span_structs)
-
-        extracted = pa.array(ext_texts, pa.string())
+        extracted, spans, pks = _extract_column(rb.column(text_idx)).flatten()
         latency_ms = (time.perf_counter() - t0) * 1000.0
         n = rb.num_rows
         new_cols = [
             extracted,
             spans,
-            pa.array(pks, pa.string()),
-            pa.array([EXTRACTOR_VERSION] * n, pa.string()),
-            pa.array([pid] * n, pa.int32()),
-            pa.array([latency_ms] * n, pa.float64()),
+            pks,
+            pa.repeat(pa.scalar(EXTRACTOR_VERSION, pa.string()), n),
+            pa.repeat(pa.scalar(pid, pa.int32()), n),
+            pa.repeat(pa.scalar(latency_ms, pa.float64()), n),
             pc.cast(pc.utf8_length(rb.column(text_idx)), pa.int32()),
             pc.cast(pc.utf8_length(extracted), pa.int32()),
         ]

@@ -9,11 +9,11 @@ of input chunks against the resume state. On a 10^12-turn table this is the
 standard chunked-backfill shape: thousands of independent append snapshots,
 each individually retryable, none recomputed after a crash.
 
-Per-chunk metrics (rows, chars, error count, batch latency) come from
-``df.observe`` — Spark's accumulator path, i.e. zero extra actions — and are
-persisted INTO the manifest: the rebuild of the reference's live stats
-display (A13) as durable run metadata, next to the chunk's partition count
-(``n_partitions``).
+Per-chunk metrics (rows, rows per payload kind, chars, error count, batch
+latency) come from ``df.observe`` — Spark's accumulator path, i.e. zero
+extra actions — and are persisted INTO the manifest: the rebuild of the
+reference's live stats display (A13) as durable run metadata, next to the
+chunk's partition count (``n_partitions``).
 """
 
 from __future__ import annotations
@@ -24,10 +24,12 @@ import uuid
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from ocrautomator_spark.kernel.types import PK_ERROR, PK_HTML, PK_MIXED, PK_PDF, PK_PLAIN
 from ocrautomator_spark.spark.extract_job import extract_partitions, run_extract
 from ocrautomator_spark.spark.tableio import ParquetManifestIO
 
 BUCKET_COL = "_bucket"
+PAYLOAD_KINDS = (PK_HTML, PK_PDF, PK_MIXED, PK_PLAIN, PK_ERROR)
 
 
 def bucket_of(n_buckets: int):
@@ -44,6 +46,9 @@ def _run_chunk(with_bucket: DataFrame, io: ParquetManifestIO, b: int, n_partitio
         F.sum("n_chars_out").alias("chars_out"),
         F.avg("batch_latency_ms").alias("avg_batch_latency_ms"),
         F.sum(F.when(F.col("payload_kind") == "error", 1).otherwise(0)).alias("errors"),
+        F.create_map(
+            *(x for k in PAYLOAD_KINDS for x in (F.lit(k), F.count_if(F.col("payload_kind") == k)))
+        ).alias("rows_by_kind"),
     )
     # the chunk's jobs carry run_pipeline:<run_id>:b<b>; the caller's
     # description comes back after
@@ -56,10 +61,13 @@ def _run_chunk(with_bucket: DataFrame, io: ParquetManifestIO, b: int, n_partitio
     finally:
         sc.setJobDescription(prior)
     wall = time.perf_counter() - t0
+    metrics = dict(obs.get)
+    by_kind = metrics.pop("rows_by_kind")
     stats = {
         k: (v if v is None else (int(v) if k in ("rows", "chars_in", "chars_out", "errors") else float(v)))
-        for k, v in obs.get.items()
+        for k, v in metrics.items()
     }
+    stats["rows_by_kind"] = {k: int(by_kind[k]) for k in PAYLOAD_KINDS}
     stats["wall_sec"] = round(wall, 3)
     stats["n_partitions"] = n_partitions
     return io.commit_bucket(b, run_id, stats)

@@ -57,11 +57,17 @@ def test_manifest_metrics_and_lineage(spark, tmp_path):
     manifests = run_pipeline(inp, io, n_buckets=3, n_partitions=2, run_id="r")
     total_rows = sum(int(m["rows"]) for m in manifests)
     assert total_rows == inp.count()
+    kinds = {"html", "pdf_layout", "mixed_markup", "plain", "error"}
     for m in manifests:
         assert m["chars_out"] > 0
         assert m["errors"] == 0
         assert m["avg_batch_latency_ms"] > 0
         assert m["wall_sec"] > 0
+        # rows per payload kind: every kind keyed, summing to rows
+        assert set(m["rows_by_kind"]) == kinds
+        assert sum(m["rows_by_kind"].values()) == m["rows"]
+        assert m["rows_by_kind"]["error"] == m["errors"]
+    assert all(sum(m["rows_by_kind"][k] for m in manifests) > 0 for k in kinds - {"error"})
     # lineage columns present on every output row
     out = io.read(spark)
     cols = set(out.columns)

@@ -1,12 +1,24 @@
 """M1 end-to-end slice: scan → salted repartition → mapInPandas → local sort
-→ agg (SURVEY.md §7 M1) over the driver's sf0.001 tables and synth transcripts."""
+→ agg (SURVEY.md §7 M1) over the driver's sf0.001 tables and synth transcripts,
+and ``extract_batches`` against ``extract_one`` row for row."""
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from ocrautomator_spark.kernel import EXTRACTOR_VERSION
-from ocrautomator_spark.spark.extract_job import extract_partitions, flagship, run_extract
+from ocrautomator_spark.kernel.extractor import extract_one
+from ocrautomator_spark.spark.extract_job import (
+    _plain_single_block,
+    extract_batches,
+    extract_partitions,
+    flagship,
+    run_extract,
+)
 from ocrautomator_spark.spark.schemas import TRANSCRIPTS
 from ocrautomator_spark.spark.synth_job import synth_transcripts_df
 from tests.conftest import SF_DIR
@@ -94,3 +106,86 @@ def test_extract_partitions_stream_falls_back_to_shuffle_partitions(spark, tmp_p
     synth_transcripts_df(spark, 5).write.parquet(path)
     stream = spark.readStream.schema(TRANSCRIPTS).parquet(path)
     assert extract_partitions(stream) == int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+
+# ------------------------------------------ extract_batches == extract_one
+#
+# extract_batches extracts single-line ASCII plain rows in Arrow compute and
+# every other row with extract_one; both must give extract_one's result.
+
+# every ASCII char str.split() splits on
+_ASCII_WS = "\t\n\x0b\x0c\r\x1c\x1d\x1e\x1f "
+# whitespace to str.split() but not to the Arrow fast path's regex
+_OTHER_WS = "\x85\xa0　"
+EDGE_ROWS = [
+    None,
+    "",
+    *_ASCII_WS,
+    *(f" a{w}{w}b{w}" for w in _ASCII_WS),
+    *_OTHER_WS,
+    *(f"a{w}b" for w in _OTHER_WS),
+    "é",  # not NFC
+    "page 3",
+    "Page 2 of 9",
+    "# h",
+    "- x",
+    "```",
+    "a\fb",
+    "a\n\nb",
+    "# h\n# g",
+    "<p>one</p><p>two</p>",
+    "plain words  and\trun",
+]
+FAST_ROWS = ["", " ", "a  b", "\tx\x1fy ", "one line of chat"]
+SLOW_ROWS = [None, "page 3", "a\n\nb", "<p>x</p><p>y</p>", "a\xa0b", "a\fb"]
+
+_chatty = st.lists(st.sampled_from([*_ASCII_WS, *_OTHER_WS, *"abPAGE<>#-*+1.`", "page", "<p>"]), max_size=30).map("".join)
+_rows = st.lists(st.one_of(st.none(), st.text(max_size=40), _chatty), max_size=40)
+
+
+def _via_batches(batches: list[pa.RecordBatch]) -> list[tuple]:
+    out = []
+    for rb in extract_batches(iter(batches)):
+        assert rb.column("extractor_version").to_pylist() == [EXTRACTOR_VERSION] * rb.num_rows
+        assert rb.column("partition_id").to_pylist() == [-1] * rb.num_rows
+        spans = ([tuple(s.values()) for s in row] for row in rb.column("spans").to_pylist())
+        out += zip(rb.column("extracted_text").to_pylist(), spans, rb.column("payload_kind").to_pylist())
+    return out
+
+
+def _batches(rows: list, size: int) -> list[pa.RecordBatch]:
+    """``rows`` cut into batches of ``size``; no rows make one empty batch."""
+    rb = pa.RecordBatch.from_arrays(
+        [pa.array(range(len(rows)), pa.int32()), pa.array(rows, pa.string())], names=["turn_idx", "text"]
+    )
+    return [rb.slice(i, size) for i in range(0, max(len(rows), 1), size)]
+
+
+def _want(rows: list) -> list[tuple]:
+    return [(r.extracted_text, [tuple(s) for s in r.spans], r.payload_kind) for r in map(extract_one, rows)]
+
+
+@pytest.mark.parametrize("size", [1, 7, 2048])
+def test_extract_batches_equals_extract_one_on_edge_rows(size):
+    assert _via_batches(_batches(EDGE_ROWS, size)) == _want(EDGE_ROWS)
+
+
+@settings(max_examples=200, deadline=None)
+@given(_rows)
+def test_extract_batches_equals_extract_one(rows):
+    want = _want(rows)
+    for size in (1, 7, 2048):
+        assert _via_batches(_batches(rows, size)) == want
+
+
+@pytest.mark.parametrize("rows", [FAST_ROWS, SLOW_ROWS, []], ids=["all_fast", "all_slow", "empty"])
+def test_extract_batches_one_path_batches(rows):
+    """A batch whose rows all take one path skips the merge, with the same
+    schema and results as a mixed batch."""
+    assert _plain_single_block(pa.array(rows, pa.string())).to_pylist() == [rows is FAST_ROWS] * len(rows)
+    (batch,) = _batches(rows, 2048)
+    (out,) = extract_batches(iter([batch]))
+    (mixed,) = extract_batches(iter(_batches(FAST_ROWS + SLOW_ROWS, 2048)))
+    assert out.num_rows == len(rows)
+    assert out.schema == mixed.schema
+    assert _via_batches([batch]) == _want(rows)

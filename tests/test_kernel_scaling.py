@@ -3,9 +3,11 @@
 Each family below is markup that a truncated page or code full of `<`
 comparisons produces, and that a regex or a scan-ahead loop can turn
 quadratic: unterminated `<` runs (no `>` anywhere after them), open tags
-that never close, and comment openers without an end marker. Every kernel
-entry point must take at most 6x as long on 80 KB as on 20 KB of the same
-family (linear is 4x). Times are the best of several runs with the cyclic
+that never close, and comment openers without an end marker; plus one long
+line of mixed whitespace, which ``extract_batches`` extracts in Arrow
+compute instead of the kernel. Every kernel entry point, and
+``extract_batches`` on a one-row batch, must take at most 6x as long on
+80 KB as on 20 KB of the same family (linear is 4x). Times are the best of several runs with the cyclic
 garbage collector off, as ``timeit`` does: a full collection walks the
 whole process heap, which in a long test run holds far more than the
 kernel allocates, so its cost is not the kernel's. A 1 ms floor under the
@@ -21,6 +23,7 @@ from __future__ import annotations
 import gc
 import time
 
+import pyarrow as pa
 import pytest
 
 from ocrautomator_spark.kernel.extractor import extract_one
@@ -28,6 +31,7 @@ from ocrautomator_spark.kernel.html_extract import segment_html
 from ocrautomator_spark.kernel.markup import extract_mixed, extract_plain, strip_inline
 from ocrautomator_spark.kernel.pdf_reflow import reflow_pdf
 from ocrautomator_spark.kernel.sniff import sniff
+from ocrautomator_spark.spark.extract_job import extract_batches
 
 FAMILIES = {
     "lt_b": lambda n: "<html><body><p>x</p>" + "<b" * (n // 2),
@@ -36,8 +40,20 @@ FAMILIES = {
     "open_a": lambda n: ("<p>" + "<a " * (n // 12)) * 4,
     "comment": lambda n: "<!--" * (n // 4),
     "lt_lines": lambda n: "x <b\n" * (n // 5),
+    "ws_run": lambda n: "a" + " \t\x0b\r" * (n // 4) + "b",
 }
-ENTRY_POINTS = [sniff, segment_html, strip_inline, extract_mixed, extract_plain, reflow_pdf, extract_one]
+
+
+def extract_batches_row(s: str) -> None:
+    """``extract_batches`` on a one-row batch: its Arrow path takes
+    single-line ASCII plain rows, ``extract_one`` the rest."""
+    for _ in extract_batches(iter([pa.RecordBatch.from_pydict({"text": pa.array([s], pa.string())})])):
+        pass
+
+
+ENTRY_POINTS = [
+    sniff, segment_html, strip_inline, extract_mixed, extract_plain, reflow_pdf, extract_one, extract_batches_row,
+]
 
 
 def _best_s(fn, small: str, large: str, reps: int = 7) -> tuple[float, float]:
