@@ -16,13 +16,14 @@ Families:
 * multimodal — image/audio/video columns as binary with a stubbed decode.
 
 Scale notes (these run on ~100 TB in production):
-* every pairwise method goes through a candidate-generation join (shared
-  gram / LSH band / hash bucket) — never an unbounded crossJoin; every
+* every pairwise method goes through candidate generation on a shared
+  key (gram / LSH band / hash bucket) — never an unbounded crossJoin; every
   broadcast nested-loop join has a constant-size broadcast side: the 1-row
   query vector, the IVF_NLIST-row centroid table, or the
   ANN_BATCH_QUERIES-row query set;
-* hot-key discipline: grams above MAX_DF document frequency are dropped
-  before the self-join (the classic stop-gram guard for 100 TB corpora);
+* hot-key discipline: keys in more than MAX_DF docs (MAX_BAND_BUCKET for
+  LSH buckets) are dropped or starred before any per-key pair list is built
+  (``_doc_freq`` + ``_pairs_within_key``, the classic stop-gram guard);
 * all hashing is deterministic: xxhash64 for sketch/bucket hashes
   (seedable, collision tolerance is part of the sketch math), md5 or
   mod-p polynomial hashes where a DuckDB oracle must reproduce the value,
@@ -37,6 +38,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
+from pyspark.sql.window import Window
 
 from ocrautomator_spark.queries.common import T, par_scan, q
 
@@ -72,6 +74,44 @@ def dedup_exact(spark: SparkSession, sf: str) -> DataFrame:
 
 JACCARD_THRESHOLD = 0.15
 MAX_DF = 100  # stop-gram guard: grams in more docs than this are dropped
+
+
+def _doc_freq(rows: DataFrame, key: str) -> DataFrame:
+    """``rows`` plus ``df``, the number of distinct doc_ids sharing the row's
+    ``key``: one exchange and one sort on ``key`` (dense_rank by doc_id,
+    then its max). Exact when a document repeats a key, which ``count(*)``
+    would count twice. A hot key's rows stay in the window's spill-backed
+    buffer; nothing is collected per key."""
+    by_doc = Window.partitionBy(key).orderBy("doc_id")
+    return rows.withColumn("df", F.dense_rank().over(by_doc)).withColumn(
+        "df", F.max("df").over(Window.partitionBy(key))
+    )
+
+
+def _pairs_within_key(rows: DataFrame, key: str, cap: int, *payload: str) -> DataFrame:
+    """One row per (pair, key) for every doc pair (doc_a < doc_b) sharing a
+    ``key`` held by 2..``cap`` documents, from ``_doc_freq`` rows unique on
+    (doc_id, key). The cap filter runs before the aggregate, so no list
+    grows past ``cap``; the groupBy clusters like the window under it, so it
+    adds no exchange. Each ``payload`` column comes as <col>_a / <col>_b."""
+    keyed = (
+        rows.filter(F.col("df").between(2, cap))
+        .groupBy(key)
+        .agg(F.array_sort(F.collect_list(F.struct("doc_id", *payload))).alias("l"))
+    )
+
+    def pair(a, b):
+        payloads = [a[p].alias(f"{p}_a") for p in payload] + [b[p].alias(f"{p}_b") for p in payload]
+        return F.struct(a["doc_id"].alias("doc_a"), b["doc_id"].alias("doc_b"), *payloads)
+
+    n = F.size("l")
+    pairs = F.flatten(  # l[i] with every later l[j], i < j
+        F.transform(
+            F.sequence(F.lit(1), n - 1),
+            lambda i: F.transform(F.slice("l", i + 1, n - i), lambda b: pair(F.element_at("l", i), b)),
+        )
+    )
+    return keyed.select(F.explode(pairs).alias("p")).select("p.*")
 
 
 def _split_words(df: DataFrame) -> DataFrame:
@@ -124,19 +164,16 @@ def _word_ngrams(df: DataFrame, n: int) -> DataFrame:
     """,
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf: str) -> DataFrame:
-    """Exact 3-gram Jaccard near-dup pairs via shared-gram candidate join."""
+    """Exact 3-gram Jaccard near-dup pairs from per-gram candidate pairs."""
     # (r7: par_scan on the documents scan measured 1.85s -> 2.99s here — the
     # round-robin exchange disturbs the downstream join layout for more than
     # the scan-fused split+explode is worth; contrast the md5-heavy
     # substring scans)
-    g = _word_ngrams(T(spark, sf, "documents").select("doc_id", "text"), 3)
-    keep = g.groupBy("gram").agg(F.count("*").alias("df")).filter(F.col("df") <= MAX_DF).select("gram")
-    gk = g.join(keep, "gram")
-    counts = gk.groupBy("doc_id").agg(F.count("*").alias("n"))
-    a, b = gk.alias("a"), gk.alias("b")
+    g = _doc_freq(_word_ngrams(T(spark, sf, "documents").select("doc_id", "text"), 3), "gram")
+    counts = g.filter(F.col("df") <= MAX_DF).groupBy("doc_id").agg(F.count("*").alias("n"))
     pairs = (
-        a.join(b, (F.col("a.gram") == F.col("b.gram")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        _pairs_within_key(g, "gram", MAX_DF)
+        .groupBy("doc_a", "doc_b")
         .agg(F.count("*").alias("n_shared"))
     )
     ca = counts.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
@@ -157,8 +194,8 @@ LSH_ROWS = MINHASH_K // LSH_BANDS
 MINHASH_EST_THRESHOLD = 0.5
 # hot-bucket guard: a band bucket of k docs emits k² candidate pairs, so a
 # degenerate corpus (many near-identical short docs) would blow up the
-# self-join. Buckets above this size switch from all-pairs to a STAR join —
-# every member pairs with the bucket's min doc_id (O(k) edges) — so members
+# pairing. Buckets above this size are never collected: each member emits
+# one STAR edge to the bucket's min doc_id (O(k) edges) — so members
 # whose signature agreement with the hub clears MINHASH_EST_THRESHOLD stay
 # connected for downstream connected-components. (A member similar to OTHER
 # bucket members but <0.5-similar to the hub can still be missed; for the
@@ -256,63 +293,33 @@ def _minhash_band_candidates(sigs: DataFrame) -> DataFrame:
 def _band_candidates(sigs: DataFrame, sig, bands) -> DataFrame:
     """Shared LSH candidate stage of the minhash and simhash dedups: explode
     each doc's ``bands`` (array<struct<band, bh>>) next to its signature
-    ``sig`` → per-(band, bucket) self-join with the hot-bucket star guard
-    (buckets over MAX_BAND_BUCKET switch to O(k) hub edges) → distinct
-    candidate pairs carrying both signatures (doc_a, doc_b, sa, sb)."""
-    # materialize the banded signatures ONCE: they feed the bucket stats, the
-    # anti-join, both self-join sides, and the hub lookup below
-    sigd = (
-        sigs.select("doc_id", sig.alias("sig"), F.explode(bands).alias("b"))
-        .select("doc_id", "sig", F.col("b.band").alias("band"), F.col("b.bh").alias("bh"))
-        .localCheckpoint()
+    ``sig`` → one window over each (band, bucket) gives its document count,
+    its min doc_id (the hub) and the hub's signature → buckets of at most
+    MAX_BAND_BUCKET docs emit all their pairs, bigger ones O(k) star edges
+    to the hub → distinct candidate pairs carrying both signatures
+    (doc_a, doc_b, sig_a, sig_b)."""
+    sigd = sigs.select("doc_id", sig.alias("sig"), F.explode(bands).alias("b"))
+    bucket = Window.partitionBy("b")
+    banded = (
+        _doc_freq(sigd, "b")
+        .withColumn("hub", F.min("doc_id").over(bucket))
+        .withColumn("hub_sig", F.min_by("sig", "doc_id").over(bucket))
     )
-    # hot buckets (tiny by construction — each holds > MAX_BAND_BUCKET docs)
-    hot = (
-        sigd.groupBy("band", "bh")
-        .agg(F.count("*").alias("n"), F.min("doc_id").alias("hub"))
-        .filter(F.col("n") > MAX_BAND_BUCKET)
-        .select("band", "bh", "hub")
+    cold = _pairs_within_key(banded, "b", MAX_BAND_BUCKET, "sig")
+    # hot buckets: star edges to the bucket's min doc_id, row by row (hub <
+    # member always, so (hub, member) is already ordered) — see the
+    # MAX_BAND_BUCKET note for the exact connectivity guarantee
+    hot = banded.filter((F.col("df") > MAX_BAND_BUCKET) & (F.col("doc_id") != F.col("hub"))).selectExpr(
+        "hub AS doc_a", "doc_id AS doc_b", "hub_sig AS sig_a", "sig AS sig_b"
     )
-    # normal buckets: all-pairs within the bucket
-    cold = sigd.join(F.broadcast(hot.select("band", "bh")), ["band", "bh"], "left_anti")
-    a, b = cold.alias("a"), cold.alias("b")
-    cand_cold = a.join(
-        b,
-        (F.col("a.band") == F.col("b.band"))
-        & (F.col("a.bh") == F.col("b.bh"))
-        & (F.col("a.doc_id") < F.col("b.doc_id")),
-    ).select(
-        F.col("a.doc_id").alias("doc_a"),
-        F.col("b.doc_id").alias("doc_b"),
-        F.col("a.sig").alias("sa"),
-        F.col("b.sig").alias("sb"),
-    )
-    # hot buckets: star join to the bucket's min doc_id (hub < member always,
-    # so (hub, member) is already ordered); O(k) edges — see MAX_BAND_BUCKET
-    # note for the exact connectivity guarantee
-    hubs = hot.select("hub").distinct()
-    hub_sig = sigd.select("doc_id", "sig").join(
-        F.broadcast(hubs), F.col("doc_id") == F.col("hub")
-    ).select("hub", F.col("sig").alias("hub_sig")).distinct()
-    cand_hot = (
-        sigd.join(F.broadcast(hot), ["band", "bh"])
-        .filter(F.col("doc_id") != F.col("hub"))
-        .join(F.broadcast(hub_sig), "hub")
-        .select(
-            F.col("hub").alias("doc_a"),
-            F.col("doc_id").alias("doc_b"),
-            F.col("hub_sig").alias("sa"),
-            F.col("sig").alias("sb"),
-        )
-    )
-    return cand_cold.union(cand_hot).distinct()
+    return cold.union(hot).distinct()
 
 
 def _sig_agreement() -> "F.Column":
     """Fraction of agreeing signature positions = the (weighted) Jaccard
     estimator shared by both minhash variants."""
     agree = F.aggregate(
-        F.zip_with("sa", "sb", lambda x, y: F.when(x == y, 1).otherwise(0)),
+        F.zip_with("sig_a", "sig_b", lambda x, y: F.when(x == y, 1).otherwise(0)),
         F.lit(0),
         lambda acc, x: acc + x,
     )
@@ -381,8 +388,8 @@ def _minhash_oracle_sql(weighted: bool) -> str:
 @q("dedup_minhash_lsh", _minhash_oracle_sql(weighted=False))
 def dedup_minhash_lsh(spark: SparkSession, sf: str) -> DataFrame:
     """MinHash+LSH near-dup detection, the 100 TB-scale dedup path:
-    shingle → K min-hashes → band keys → candidate pairs via band-bucket
-    self-join → signature-agreement estimate of Jaccard. All JVM-side, no
+    shingle → K min-hashes → band keys → candidate pairs within each band
+    bucket → signature-agreement estimate of Jaccard. All JVM-side, no
     Python.
 
     Hash-oracled since round 4 (gate inverted round 6): under
@@ -502,8 +509,9 @@ def _simhash_sql() -> str:
 @q("dedup_simhash", _simhash_sql())
 def dedup_simhash(spark: SparkSession, sf: str) -> DataFrame:
     """SimHash near-dup: 64-bit signature per doc (Arrow-batched pandas UDF,
-    numpy bit-matrix — no per-row Python), then banded self-join so only
-    docs sharing a 16-bit band are compared; F.bit_count(xor) for hamming.
+    numpy bit-matrix — no per-row Python), then banded candidate pairs so
+    only docs sharing a 16-bit band are compared; F.bit_count(xor) for
+    hamming.
 
     Hash-oracled since round 4: the per-word hash is the first 8 bytes of
     md5 (big-endian), which DuckDB reproduces exactly via hex-prefix cast —
@@ -555,7 +563,7 @@ def dedup_simhash(spark: SparkSession, sf: str) -> DataFrame:
         .select(
             "doc_a",
             "doc_b",
-            F.bit_count(F.col("sa").bitwiseXOR(F.col("sb"))).alias("hamming"),
+            F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b"))).alias("hamming"),
         )
         .filter(F.col("hamming") <= SIMHASH_MAX_HAMMING)
     )
@@ -611,39 +619,23 @@ def _substring_corpus(
 
 
 def _shared_window_pairs(sel: DataFrame, key: str) -> DataFrame:
-    """Pair tail of both pair views: (doc_id, ``key``) sampled window keys →
-    MAX_DF stop-window guard → ``key``-equi self-join → doc pairs sharing
-    >= SUBSTR_MIN_SHARED windows. ``key`` is the md5 ``h`` or the rolling
-    ``k``. ``sel`` is unique on (doc_id, ``key``), so the window count over
-    ``key`` is the key's document frequency; the window clusters by ``key``
-    like the self-join, so the guard adds no exchange of its own."""
-    from pyspark.sql.window import Window
-
-    sk = (
-        sel.withColumn("df", F.count("*").over(Window.partitionBy(key)))
-        .filter(F.col("df") <= MAX_DF)
-        .drop("df")
-    )
-    a, b = sk.alias("a"), sk.alias("b")
+    """Pair tail of both pair views: (doc_id, ``key``) sampled window keys
+    (md5 ``h`` or rolling ``k``) → doc pairs sharing >= SUBSTR_MIN_SHARED
+    keys held by at most MAX_DF docs; the guard and the pairing share one
+    exchange on ``key``."""
     return (
-        a.join(b, (F.col(f"a.{key}") == F.col(f"b.{key}")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        _pairs_within_key(_doc_freq(sel, key), key, MAX_DF)
+        .groupBy("doc_a", "doc_b")
         .agg(F.count("*").alias("n_shared_windows"))
         .filter(F.col("n_shared_windows") >= SUBSTR_MIN_SHARED)
     )
 
 
-def _df_guarded_match(sel: DataFrame, key: str) -> DataFrame:
+def _matched(sel: DataFrame, key: str) -> DataFrame:
     """(doc_id, i) of every sampled window (doc_id, i, ``key``) whose key
     occurs in 2..MAX_DF distinct documents — the match stage of the span
     and excise views, md5 (``h``) and rolling (``k``) alike."""
-    keep = (
-        sel.groupBy(key)
-        .agg(F.countDistinct("doc_id").alias("nd"))
-        .filter((F.col("nd") >= 2) & (F.col("nd") <= MAX_DF))
-        .select(key)
-    )
-    return sel.join(keep, key).select("doc_id", "i")
+    return _doc_freq(sel, key).filter(F.col("df").between(2, MAX_DF)).select("doc_id", "i")
 
 
 def _span_extents(matched: DataFrame) -> DataFrame:
@@ -722,15 +714,15 @@ def dedup_substring_windows(spark: SparkSession, sf: str) -> DataFrame:
 
     Scale: the sample keeps ~1/16 of windows, so the shuffle moves
     corpus_bytes/16 in fixed-width md5 keys; the stop-shingle DF guard
-    (MAX_DF) caps any bucket before the self-join — same discipline as
+    (MAX_DF) caps any bucket before its pairs are listed — same discipline as
     dedup_ngram_jaccard, never all-pairs. Honest compute note: hashing a
     64-char window at every offset pushes ~64× the corpus bytes through
     md5 in the scan stage (embarrassingly parallel, no shuffle, but real
     CPU); the production deployment swaps the window fingerprint for the
     Rabin-Karp ROLLING hash of ``dedup_substring_windows_rk`` below (O(1)
     per offset; measured 8.4× faster scan stage on 4k-char docs, gap grows
-    with doc length) while keeping this exact mod-sampling + bucket-join
-    shape — md5 stays here because it is the fingerprint both engines
+    with doc length) while keeping this exact mod-sampling + per-bucket
+    pairing shape — md5 stays here because it is the fingerprint both engines
     share, which is what makes this entry hash-oracle-able, and
     tests/test_substring_ground_truth.py pins the two detectors' pair-set
     agreement against an exact ground truth. The corpus has ZERO natural
@@ -749,12 +741,11 @@ def dedup_substring_windows(spark: SparkSession, sf: str) -> DataFrame:
             F.filter(hs, lambda h: F.substring(h, 1, 1) == F.lit(SUBSTR_SEL_HEX))
         ).alias("h"),
     )
-    # ONE exchange serves the whole candidate pipeline (r7): hashpartitioning
-    # on h alone satisfies the (doc_id, h) distinct's clustering (a subset of
-    # the grouping keys), the DF guard's window over h, AND both sides of
-    # the h-equi self-join, so the md5 scan runs in one shuffle stage and
-    # the second join side reuses it. Pinned count so AQE cannot fold the
-    # compute-heavy join stage onto one core.
+    # ONE exchange serves the whole candidate pipeline: hashpartitioning on
+    # h alone satisfies the (doc_id, h) distinct's clustering (a subset of
+    # the grouping keys), the DF guard's window over h AND the per-h pair
+    # lists, so the md5 scan runs in one shuffle stage. Pinned count so AQE
+    # cannot fold the compute-heavy pairing stage onto one core.
     sel = (
         wins.repartition(wins.sparkSession.sparkContext.defaultParallelism, "h")
         .distinct()
@@ -784,7 +775,7 @@ def _substring_matched_windows(spark: SparkSession, sf: str) -> DataFrame:
         .select("doc_id", F.col("w.i").alias("i"), F.col("w.h").alias("h"))
         .distinct()
     )
-    return _df_guarded_match(wins.filter(F.substring("h", 1, 1) == SUBSTR_SEL_HEX), "h")
+    return _matched(wins.filter(F.substring("h", 1, 1) == SUBSTR_SEL_HEX), "h")
 
 
 # shared SQL suffix: matched sampled windows (doc_id, i), mirroring
@@ -822,9 +813,10 @@ def dedup_substring_spans(spark: SparkSession, sf: str) -> DataFrame:
     same planted passages, fully hash-oracled.
 
     Scale: identical scan/sample/DF-guard shape as dedup_substring_windows,
-    but NO pair self-join at all — the per-window doc-frequency aggregate
-    doubles as the match detector, so the whole operator is two key-bounded
-    aggregations. Cheaper than the pair view at any corpus size."""
+    but NO pairing at all — the per-window doc-frequency window doubles as
+    the match detector, so the whole operator is one window over the key
+    and one aggregation by document. Cheaper than the pair view at any
+    corpus size."""
     return _span_extents(_substring_matched_windows(spark, sf))
 
 
@@ -855,7 +847,7 @@ def dedup_substring_excise(spark: SparkSession, sf: str) -> DataFrame:
     (lowercased) view the windows were fingerprinted on; a production
     pipeline maps the span back to raw offsets before cutting.
 
-    Scale: the span side is the two-aggregation plan of
+    Scale: the span side is the window-then-aggregate plan of
     dedup_substring_spans; the surgery is a narrow map after one LEFT join
     on doc_id — no new shuffle shape."""
     return _excise(spark, sf, _substring_matched_windows(spark, sf))
@@ -865,7 +857,7 @@ def dedup_substring_excise(spark: SparkSession, sf: str) -> DataFrame:
 # The md5 detector above pushes ~64× corpus bytes through md5 (one full
 # digest per offset). This twin keeps the EXACT same sketch shape —
 # stride-1 64-char windows, 1/16 selection by hash VALUE (shift-invariant
-# Manber/Broder mod-sampling), MAX_DF stop-window guard, bucketed self-join
+# Manber/Broder mod-sampling), MAX_DF stop-window guard, per-bucket pairs
 # — but fingerprints with a polynomial rolling hash: O(1) amortized per
 # offset, ~corpus bytes of arithmetic instead of ~64× through a digest.
 RK_P = 2147483647  # Mersenne prime 2^31 − 1: every product stays < 2^62
@@ -1021,7 +1013,7 @@ def dedup_substring_windows_rk(spark: SparkSession, sf: str) -> DataFrame:
     """PRODUCTION path of exact-substring dedup (VERDICT r4 item 1): same
     operator contract as ``dedup_substring_windows`` — stride-1 64-char
     windows, shift-invariant 1/16 mod-sampling by hash value, MAX_DF
-    stop-window guard, bucketed self-join, pairs sharing ≥ SUBSTR_MIN_SHARED
+    stop-window guard, per-bucket pairs, pairs sharing ≥ SUBSTR_MIN_SHARED
     sampled windows — but fingerprinted with a Rabin-Karp polynomial rolling
     hash instead of per-offset md5. Scan-stage cost drops from ~64× corpus
     bytes through a digest to ~corpus bytes of uint64 arithmetic (numpy
@@ -1045,8 +1037,8 @@ def dedup_substring_windows_rk(spark: SparkSession, sf: str) -> DataFrame:
     driver-side ground truth by tests/test_substring_ground_truth.py."""
     # rk_keys emits np.unique keys per doc, so (doc_id, k) is unique by
     # construction and needs no distinct. The DF guard's window is the
-    # sample's only consumer and both self-join sides reuse its exchange on
-    # k, so the pandas-UDF scan runs once without a materialization barrier.
+    # sample's only consumer and the per-k pair lists cluster like it, so
+    # the pandas-UDF scan runs once, in front of one exchange on k.
     return _shared_window_pairs(_rk_sampled_keys(spark, sf), "k")
 
 
@@ -1072,9 +1064,9 @@ def _rk_matched_windows(spark: SparkSession, sf: str) -> DataFrame:
     """(doc_id, i) of every RK-sampled window whose content occurs in 2..
     MAX_DF distinct documents — the production twin of
     ``_substring_matched_windows``."""
-    # localCheckpoint: two consumers (DF-guard + match join) of the
-    # pandas-UDF scan — same barrier rationale as the pair view
-    return _df_guarded_match(_rk_sampled_windows(spark, sf).localCheckpoint(), "k")
+    # the frequency window is the pandas-UDF scan's only consumer, so the
+    # scan runs once without a materialization barrier
+    return _matched(_rk_sampled_windows(spark, sf), "k")
 
 
 @q(
@@ -1795,8 +1787,6 @@ def ann_batch_topk(spark: SparkSession, sf: str) -> DataFrame:
     The BroadcastNestedLoopJoin here is intentional and linear: the broadcast
     side is the CONSTANT-size query set (cost Q·n), unlike the quadratic
     corpus-vs-corpus inequality join the dedup operators forbid."""
-    from pyspark.sql.window import Window
-
     e = _embeddings(spark, sf).withColumn("nrm", _norm(F.col("v")))
     qs = e.filter(F.col("vec_id") < ANN_BATCH_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv"), F.col("nrm").alias("qn")
@@ -2689,8 +2679,6 @@ def ann_pq_batch_topk(spark: SparkSession, sf: str) -> DataFrame:
     order via sort_array-struct F.aggregate ≡ DuckDB list_sum(list(d ORDER
     BY m)) — the curation_importance_weights trick — so every double is
     bit-identical and the whole batch pipeline is hash-gated."""
-    from pyspark.sql.window import Window
-
     e = _embeddings(spark, sf)
     books, cssqs, codes = _pq2_index(spark, sf)  # persisted artifact, not retraining
     import math
@@ -2950,8 +2938,6 @@ def _pack_bins(
     shard widths, including bins straddling shard boundaries), while scaling:
     the only single-partition exchange in the plan is over the per-shard
     aggregate, never the corpus."""
-    from pyspark.sql.window import Window
-
     d = d.withColumn("shard", F.floor(F.col("doc_id") / shard_docs))
     w_in = (
         Window.partitionBy("shard")

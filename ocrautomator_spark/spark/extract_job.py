@@ -179,7 +179,7 @@ def extract_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatc
             pa.repeat(pa.scalar(EXTRACTOR_VERSION, pa.string()), n),
             pa.repeat(pa.scalar(pid, pa.int32()), n),
             pa.repeat(pa.scalar(latency_ms, pa.float64()), n),
-            pc.cast(pc.utf8_length(rb.column(text_idx)), pa.int32()),
+            pc.cast(pc.fill_null(pc.utf8_length(rb.column(text_idx)), 0), pa.int32()),
             pc.cast(pc.utf8_length(extracted), pa.int32()),
         ]
         keep_idx = [i for i, name in enumerate(rb.schema.names) if name != "text"]

@@ -120,12 +120,16 @@ def run_pipeline(
 
     # pool threads start with no Spark local properties (pinned-thread
     # mode): the wrapper carries the caller's job group, description,
-    # scheduler pool and job tags into every chunk job
-    run_chunk = inheritable_thread_target(input_df.sparkSession)(_run_chunk)
+    # scheduler pool and job tags into every chunk job. Wrap per chunk: each
+    # wrap clones the properties once and installs that same object in the
+    # thread it runs on, so one shared wrap lets a chunk's description
+    # overwrite its neighbour's
     limit = len(todo) if fail_after is None else min(fail_after, len(todo))
     with ThreadPoolExecutor(max_workers=max_concurrent) as pool:
         futures = [
-            pool.submit(run_chunk, with_bucket, io, b, n_partitions, run_id)
+            pool.submit(
+                inheritable_thread_target(input_df.sparkSession)(_run_chunk), with_bucket, io, b, n_partitions, run_id
+            )
             for b in todo[:limit]
         ]
         committed = [f.result() for f in futures]

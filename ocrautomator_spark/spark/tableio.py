@@ -153,19 +153,18 @@ class ParquetManifestIO:
             raise FileNotFoundError(f"bucket {bucket} has no committed manifest")
         old_path = pathlib.Path(m["path"])
         files_before = len(list(old_path.glob("*.parquet")))
-        gen = int(m.get("gen", 0)) + 1
-        new_path = self.data_dir / f"bucket={bucket:05d}.g{gen}"
+        path, gen = self._next_path(bucket)
         obs = Observation(f"compact_{run_id}_b{bucket}")
         df = spark.read.parquet(str(old_path)).observe(obs, F.count(F.lit(1)).alias("rows"))
-        df.coalesce(target_files).write.mode("overwrite").parquet(str(new_path))
+        df.coalesce(target_files).write.mode("overwrite").parquet(path)
         manifest = {
             **m,
-            "path": str(new_path),
+            "path": path,
             "gen": gen,
             "run_id": run_id,
             "compacted_at": time.time(),
             "files_before": files_before,
-            "files_after": len(list(new_path.glob("*.parquet"))),
+            "files_after": len(list(pathlib.Path(path).glob("*.parquet"))),
             "rows": int(obs.get["rows"]),
         }
         self._write_manifest(manifest)  # readers atomically switch generations here

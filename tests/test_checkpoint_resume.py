@@ -7,6 +7,8 @@ committed chunks (verified via run_id provenance in the manifests).
 
 from __future__ import annotations
 
+import threading
+
 import pytest
 
 from ocrautomator_spark.spark.pipeline import run_pipeline
@@ -157,14 +159,20 @@ def test_concurrent_chunks_keep_caller_job_group(spark, tmp_path):
 
 
 class _DescriptionIO(ParquetManifestIO):
-    """Records the job description each chunk's data write runs under."""
+    """Records the job description each chunk's data write runs under. With
+    ``overlap`` > 1, the first ``overlap`` chunks read it only once all of
+    them have set theirs, so concurrent chunks that shared one set of local
+    properties would see each other's label."""
 
-    def __init__(self, root: str, spark) -> None:
+    def __init__(self, root: str, spark, overlap: int = 1) -> None:
         super().__init__(root)
         self.sc = spark.sparkContext
         self.seen: dict[int, str | None] = {}
+        self.barrier = threading.Barrier(overlap, timeout=120) if overlap > 1 else None
 
     def write_bucket_data(self, df, bucket: int) -> str:
+        if self.barrier is not None and bucket < self.barrier.parties:
+            self.barrier.wait()
         self.seen[bucket] = self.sc.getLocalProperty("spark.job.description")
         return super().write_bucket_data(df, bucket)
 
@@ -175,7 +183,7 @@ def test_chunk_jobs_are_labelled(spark, tmp_path, max_concurrent):
     serial and the concurrent path, and the caller's description is back
     afterwards."""
     sc = spark.sparkContext
-    io = _DescriptionIO(str(tmp_path / "lbl"), spark)
+    io = _DescriptionIO(str(tmp_path / "lbl"), spark, overlap=max_concurrent)
     sc.setJobDescription("caller")
     try:
         run_pipeline(

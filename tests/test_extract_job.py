@@ -19,8 +19,10 @@ from ocrautomator_spark.spark.extract_job import (
     flagship,
     run_extract,
 )
-from ocrautomator_spark.spark.schemas import TRANSCRIPTS
+from ocrautomator_spark.spark.pipeline import run_pipeline
+from ocrautomator_spark.spark.schemas import EXTRACT_FIELDS, TRANSCRIPTS
 from ocrautomator_spark.spark.synth_job import synth_transcripts_df
+from ocrautomator_spark.spark.tableio import ParquetManifestIO
 from tests.conftest import SF_DIR
 
 
@@ -89,6 +91,35 @@ def test_error_channel_never_breaks_batch(spark):
     assert len(out) == 1
     assert out[0]["extracted_text"] == ""
     assert out[0]["spans"] == []
+
+
+def _with_null_text(spark, n_convs: int):
+    """synth transcripts plus one turn whose text is NULL."""
+    df = synth_transcripts_df(spark, n_convs=n_convs)
+    null_row = df.limit(1).select(
+        F.lit("c-null").alias("conv_id"),
+        *[F.lit(None).cast("string").alias(c) if c == "text" else F.col(c) for c in df.columns[1:]],
+    )
+    return df.unionByName(null_row)
+
+
+def test_null_text_is_one_error_row(spark):
+    df = _with_null_text(spark, 6)
+    out = run_extract(df, n_partitions=2).collect()
+    assert len(out) == df.count()
+    (row,) = [r for r in out if r["conv_id"] == "c-null"]
+    assert row["payload_kind"] == "error"
+    assert row["n_chars_in"] == 0
+    assert row["n_chars_out"] == 0
+    assert row["spans"] == []
+
+
+def test_null_text_counts_as_error_in_manifest(spark, tmp_path):
+    df = _with_null_text(spark, 6)
+    manifests = run_pipeline(df, ParquetManifestIO(str(tmp_path / "m")), n_buckets=2, n_partitions=2, run_id="n")
+    assert sum(m["rows"] for m in manifests) == df.count()
+    assert sum(m["errors"] for m in manifests) == 1
+    assert sum(m["rows_by_kind"]["error"] for m in manifests) == 1
 
 
 # ------------------------------------------------------- partition count
@@ -189,3 +220,12 @@ def test_extract_batches_one_path_batches(rows):
     assert out.num_rows == len(rows)
     assert out.schema == mixed.schema
     assert _via_batches([batch]) == _want(rows)
+
+
+@pytest.mark.parametrize("size", [1, 7, 2048])
+def test_extract_batches_fills_every_non_nullable_field(size):
+    """No column the output schema declares non-nullable carries a null,
+    NULL-text rows included — the JVM rejects such a batch."""
+    required = [f.name for f in EXTRACT_FIELDS if not f.nullable]
+    for rb in extract_batches(iter(_batches(EDGE_ROWS, size))):
+        assert {c: rb.column(c).null_count for c in required} == dict.fromkeys(required, 0)

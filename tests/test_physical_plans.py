@@ -14,6 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ocrautomator_spark.queries import QUERIES
+from ocrautomator_spark.queries.pipeline_ops import _rk_matched_windows
 from ocrautomator_spark.spark.extract_job import flagship, run_extract
 from ocrautomator_spark.spark.synth_job import synth_transcripts_df
 from tests.conftest import SF_DIR
@@ -222,13 +223,21 @@ def test_substring_dedup_plans_have_no_quadratic_join(spark):
         assert "Cartesian" not in plan, name
 
 
+def _one_window_sort(final: str) -> None:
+    """The plan's only Sort feeds its Window operators — the guard's one
+    sort on the key — and nothing in it is broadcast."""
+    nodes = [n for _, n in _tree(final)]
+    sorts = [j for j, n in enumerate(nodes) if re.match(r"(\*\(\d+\) )?Sort ", n)]
+    assert len(sorts) == 1 and nodes[sorts[0] - 1].startswith("Window "), final
+    assert "BroadcastExchange " not in final, final
+
+
 def test_substring_windows_h_exchange_serves_every_consumer(spark):
     """dedup_substring_windows: the pinned-count repartition on h is the only
     exchange that hashes on h — the (doc_id, h) distinct, the DF guard's
-    window and both self-join sides add none of their own. Run at sf0.001,
-    the md5 window scan (the Generate) runs in ONE shuffle stage; the
-    second self-join side reads it as a ReusedExchange, and the guard has
-    no aggregate, join or broadcast of its own."""
+    window and the per-h pair lists add none of their own. Run at sf0.001,
+    the md5 window scan (its Generate) runs in ONE shuffle stage, the guard
+    sorts once, and nothing in the plan joins or broadcasts."""
     df = QUERIES["dedup_substring_windows"](spark, SF_DIR)
     plan = _plan(df)
     on_h = re.findall(r"Arguments: hashpartitioning\(h#\d+, (\d+)\), (\w+)", plan)
@@ -237,24 +246,47 @@ def test_substring_windows_h_exchange_serves_every_consumer(spark):
     assert len({n for n, _ in on_h}) == 1, on_h
 
     final = _final_plan(df)
-    gen_stages = [st for st, node in _stage_of(final) if re.match(r"(\*\(\d+\) )?Generate ", node)]
-    assert len(gen_stages) == 1 and gen_stages[0].startswith("ShuffleQueryStage"), gen_stages
-    assert re.search(r"ReusedExchange .*Exchange hashpartitioning\(h#", final), final
-    assert not re.search(r"HashAggregate\(keys=\[h#", final), "DF guard aggregates on h"
-    assert len(re.findall(r"(SortMerge|BroadcastHash|ShuffledHash)Join ", final)) == 1, final
-    assert final.count("BroadcastExchange ") <= 1, final
+    md5_stages = [st for st, node in _stage_of(final) if re.match(r"(\*\(\d+\) )?Generate .*md5\(", node)]
+    assert len(md5_stages) == 1 and md5_stages[0].startswith("ShuffleQueryStage"), md5_stages
+    assert len(re.findall(r"Exchange hashpartitioning\(h#", final)) == 1, final
+    assert "ReusedExchange" not in final, final
+    on_h_aggs = re.findall(r"Aggregate\(keys=\[h#\d+\], functions=\[(\w+)", final)
+    assert set(on_h_aggs) == {"partial_collect_list", "collect_list"}, "DF guard aggregates on h"
+    assert not re.search(r"(SortMerge|BroadcastHash|ShuffledHash)Join ", final), final
+    _one_window_sort(final)
 
 
 def test_substring_windows_rk_scan_runs_once(spark):
     """dedup_substring_windows_rk needs no materialization barrier: the DF
     guard's window is the sampled keys' only consumer, so the pandas-UDF
-    scan runs once, in front of one exchange on k, and the second self-join
-    side reads that exchange as a ReusedExchange."""
+    scan runs once, in front of the one exchange on k that the guard's sort
+    and the per-k pair lists share."""
     final = _final_plan(QUERIES["dedup_substring_windows_rk"](spark, SF_DIR))
     assert "ExistingRDD" not in final
     assert final.count("ArrowEvalPython ") == 1, final
-    on_k = re.findall(r"(ReusedExchange .*)?Exchange hashpartitioning\(k#\d+L?, \d+\)", final)
-    assert sorted(bool(r) for r in on_k) == [False, True], on_k
+    assert len(re.findall(r"Exchange hashpartitioning\(k#\d+L?, \d+\)", final)) == 1, final
+    assert "ReusedExchange" not in final, final
+    _one_window_sort(final)
+
+
+@pytest.mark.parametrize(
+    "build",
+    [
+        lambda spark: QUERIES["dedup_minhash_lsh"](spark, SF_DIR),
+        lambda spark: QUERIES["dedup_minhash_weighted"](spark, SF_DIR),
+        lambda spark: QUERIES["dedup_simhash"](spark, SF_DIR),
+        lambda spark: _rk_matched_windows(spark, SF_DIR),
+    ],
+    ids=["minhash_lsh", "minhash_weighted", "simhash", "rk_matched_windows"],
+)
+def test_guarded_key_stages_plan_no_checkpoint_or_broadcast(spark, build):
+    """The LSH band stage and the Rabin-Karp match stage guard their keys
+    with a window over one exchange: no checkpointed scan (ExistingRDD) and
+    no broadcast anti-join or hub join."""
+    final = _final_plan(build(spark))
+    assert "ExistingRDD" not in final, final
+    assert "BroadcastExchange" not in final, final
+    assert "Window " in final, final
 
 
 def test_pq_adc_plan_shape(spark):

@@ -4,7 +4,10 @@ fixtures, simhash banding guarantee, LSH hyperplane determinism."""
 
 from __future__ import annotations
 
+import itertools
+
 import pandas as pd
+import pytest
 
 from ocrautomator_spark.queries import QUERIES
 from ocrautomator_spark.queries.pipeline_ops import _LANG_PROFILES, _hyperplanes
@@ -865,6 +868,78 @@ def test_substring_spans_rk_cover_planted_passage(spark):
         base_id = -pid - 1
         if base_id in rk:
             assert rk[base_id]["dup_end"] >= po.SUBSTR_PLANT_OFF
+
+
+def _on_corpus(spark, name: str, texts: dict[int, str]) -> list:
+    """Collect registry entry ``name`` over a hand-built documents table."""
+    from ocrautomator_spark.queries import pipeline_ops as po
+
+    df = spark.createDataFrame(pd.DataFrame({"doc_id": list(texts), "text": list(texts.values())}))
+    orig = po.T
+    try:
+        po.T = lambda s, sf, table: df
+        return QUERIES[name](spark, "unused").collect()
+    finally:
+        po.T = orig
+
+
+def _blob(rnd, n: int) -> str:
+    return "".join(rnd.choice("abcdefghijklmnopqrstuvwxyz ") for _ in range(n))
+
+
+# documents stay under _SUBSTR_MIN_BASE chars or off the SUBSTR_PLANT_MOD
+# ids, so the corpus plants no twin of its own
+
+
+@pytest.mark.parametrize(
+    "name", ["dedup_substring_windows", "dedup_substring_windows_rk", "dedup_substring_spans", "dedup_substring_spans_rk"]
+)
+def test_substring_guard_keeps_exactly_max_df_docs(spark, name):
+    """A passage shared by exactly MAX_DF documents is found in every one of
+    them; shared by MAX_DF + 1 it is a stop-passage and nothing is found."""
+    import random
+
+    from ocrautomator_spark.queries import pipeline_ops as po
+
+    rnd = random.Random(7)
+    passage = _blob(rnd, 200)
+    texts = {d: _blob(rnd, 50) + passage + _blob(rnd, 50) for d in range(1, po.MAX_DF + 2)}
+    assert max(map(len, texts.values())) < po._SUBSTR_MIN_BASE
+    at_cap = _on_corpus(spark, name, {d: texts[d] for d in range(1, po.MAX_DF + 1)})
+    over_cap = _on_corpus(spark, name, texts)
+    if "spans" in name:
+        assert {r["doc_id"] for r in at_cap} == set(range(1, po.MAX_DF + 1))
+    else:
+        assert {(r["doc_a"], r["doc_b"]) for r in at_cap} == set(
+            itertools.combinations(range(1, po.MAX_DF + 1), 2)
+        )
+        assert min(r["n_shared_windows"] for r in at_cap) >= po.SUBSTR_MIN_SHARED
+    assert over_cap == []
+
+
+@pytest.mark.parametrize("name", ["dedup_substring_spans", "dedup_substring_spans_rk"])
+def test_substring_match_counts_a_repeating_doc_once(spark, name):
+    """The match stage's guard counts documents, not occurrences: a window
+    at two offsets of one document is in one document, so it is not
+    matched; one more document holding it matches both; and a passage in
+    MAX_DF documents, one of which repeats it, is still under the cap."""
+    import random
+
+    from ocrautomator_spark.queries import pipeline_ops as po
+
+    rnd = random.Random(11)
+    passage = _blob(rnd, 200)
+    twice = _blob(rnd, 30) + passage + _blob(rnd, 30) + passage + _blob(rnd, 30)
+    once = {d: _blob(rnd, 50) + passage + _blob(rnd, 50) for d in range(2, po.MAX_DF + 1)}
+    assert max(map(len, once.values())) < po._SUBSTR_MIN_BASE and 1 % po.SUBSTR_PLANT_MOD
+
+    def docs(texts):
+        return {r["doc_id"] for r in _on_corpus(spark, name, texts)}
+
+    alone = {1: twice, 2: _blob(rnd, 300)}
+    assert docs(alone) == set()
+    assert docs({**alone, 3: once[3]}) == {1, 3}
+    assert docs({1: twice, **once}) == set(range(1, po.MAX_DF + 1))
 
 
 def test_pq_index_builds_once_and_queries_read_artifact(spark):
