@@ -56,6 +56,20 @@ def par_scan(df: DataFrame) -> DataFrame:
     return df
 
 
+def pinned(df: DataFrame, *keys: str) -> DataFrame:
+    """Hash-repartition ``df`` on ``keys`` at a count AQE leaves alone.
+
+    Windows, carry-forward scans and fan-out joins are compute-heavy per
+    shuffled byte, and AQE coalesces partitions by bytes only: it would
+    fold such a tiny-but-hot stage onto one core. A keyed repartition on
+    the key the stage clusters by adds no exchange — it IS that stage's
+    exchange — and AQE never splits or coalesces a ``REPARTITION_BY_NUM``
+    exchange. One partition per core, so the stage's compute uses every
+    core whatever its shuffled bytes.
+    """
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism, *keys)
+
+
 def dsum(col: Column | str) -> Column:
     """Order-independent exact sum of a double expression: accumulate as
     DECIMAL(30,10), return as double. Matches the DSUM SQL macro below."""

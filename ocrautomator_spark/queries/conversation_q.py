@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ocrautomator_spark.queries.common import T, q
+from ocrautomator_spark.queries.common import T, pinned, q
 from ocrautomator_spark.spark import conversation as conv
 from ocrautomator_spark.streaming import jobs as sj
 
@@ -53,12 +53,8 @@ def events_as_transcripts(spark: SparkSession, sf: str) -> DataFrame:
         "event_type",
         "props",
     )
-    # pin the family's ONE exchange at an explicit partition count (r7):
-    # windows are compute-heavy per byte and AQE's bytes-only coalescing
-    # folded this tiny-but-hot stage onto one core. repartition on the SAME
-    # key the windows partition by adds no exchange — it IS the family's
-    # shared exchange (the plan test still counts exactly one).
-    ev = ev.repartition(ev.sparkSession.sparkContext.defaultParallelism, "conv_id")
+    # the family's ONE exchange (the plan test still counts exactly one)
+    ev = pinned(ev, "conv_id")
     w = Window.partitionBy("conv_id").orderBy("ts", "event_id")
     return ev.select(
         "conv_id",

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ocrautomator_spark.queries.common import q
+from ocrautomator_spark.queries.common import pinned, q
 from ocrautomator_spark.streaming import jobs as sj
 
 # Session gap threshold: 8 h in microseconds. The synthetic corpus has a
@@ -40,12 +40,9 @@ def _events(spark: SparkSession, sf: str) -> DataFrame:
         "event_type",
         F.unix_micros("ts").alias("t"),
     )
-    # pin the family's ONE user_id exchange at an explicit count (r7): the
-    # per-user windows/aggregates are compute-heavy per byte and AQE's
-    # bytes-only coalescing folded them onto one core; a keyed repartition
-    # IS that exchange (hashpartitioning(user_id) still satisfies every
-    # downstream clustering), with a count AQE leaves alone.
-    return ev.repartition(spark.sparkContext.defaultParallelism, "user_id")
+    # the family's ONE exchange: hashpartitioning(user_id) satisfies every
+    # downstream clustering
+    return pinned(ev, "user_id")
 
 
 _SQL_E = "SELECT user_id, event_id, event_type, epoch_us(ts) AS t FROM events"

@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 from pyspark.sql.window import Window
 
-from ocrautomator_spark.queries.common import T, par_scan, q
+from ocrautomator_spark.queries.common import T, par_scan, pinned, q
 
 # ------------------------------------------------------------------ dedup
 
@@ -744,13 +744,8 @@ def dedup_substring_windows(spark: SparkSession, sf: str) -> DataFrame:
     # ONE exchange serves the whole candidate pipeline: hashpartitioning on
     # h alone satisfies the (doc_id, h) distinct's clustering (a subset of
     # the grouping keys), the DF guard's window over h AND the per-h pair
-    # lists, so the md5 scan runs in one shuffle stage. Pinned count so AQE
-    # cannot fold the compute-heavy pairing stage onto one core.
-    sel = (
-        wins.repartition(wins.sparkSession.sparkContext.defaultParallelism, "h")
-        .distinct()
-    )
-    return _shared_window_pairs(sel, "h")
+    # lists, so the md5 scan runs in one shuffle stage
+    return _shared_window_pairs(pinned(wins, "h").distinct(), "h")
 
 
 def _substring_matched_windows(spark: SparkSession, sf: str) -> DataFrame:

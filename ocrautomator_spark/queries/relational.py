@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ocrautomator_spark.queries.common import T, davg, davg_sql, dsum, dsum_sql, par_scan, q
+from ocrautomator_spark.queries.common import T, davg, davg_sql, dsum, dsum_sql, par_scan, pinned, q
 
 # ---------------------------------------------------------------- scans
 
@@ -241,15 +241,8 @@ def join_asof(spark: SparkSession, sf: str) -> DataFrame:
         .orderBy(F.col("t").asc(), F.col("is_event").asc(), F.col("ok").asc())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    # pin the window exchange's partition count (r7): the carry-forward
-    # window is compute-heavy per byte, and AQE's bytes-only coalescing
-    # would fold this tiny-but-hot stage onto one core. repartition on the
-    # SAME key the window partitions by adds no exchange — it IS the
-    # window's exchange, with an explicit count AQE leaves alone.
-    merged = (
-        left.unionByName(right)
-        .repartition(spark.sparkContext.defaultParallelism, "k")
-        .withColumn("last_ok", F.last("ok", ignorenulls=True).over(w))
+    merged = pinned(left.unionByName(right), "k").withColumn(
+        "last_ok", F.last("ok", ignorenulls=True).over(w)
     )
     return (
         merged.filter((F.col("is_event") == 1) & F.col("last_ok").isNotNull())
@@ -396,11 +389,7 @@ def agg_cube(spark: SparkSession, sf: str) -> DataFrame:
 )
 def win_rank(spark: SparkSession, sf: str) -> DataFrame:
     w = Window.partitionBy("o_custkey").orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
-    # pinned-count keyed repartition = the window's own exchange, exempt
-    # from AQE's bytes-only coalescing (r7; measured 0.43s -> 0.31s)
-    return T(spark, sf, "orders").repartition(
-        spark.sparkContext.defaultParallelism, "o_custkey"
-    ).select(
+    return pinned(T(spark, sf, "orders"), "o_custkey").select(
         "o_custkey",
         "o_orderkey",
         F.row_number().over(w).alias("rn"),
@@ -472,10 +461,8 @@ def sort_limit(spark: SparkSession, sf: str) -> DataFrame:
 )
 def topk_per_group(spark: SparkSession, sf: str) -> DataFrame:
     w = Window.partitionBy("o_custkey").orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
-    # pinned-count keyed repartition = the window's own exchange (r7)
     return (
-        T(spark, sf, "orders")
-        .repartition(spark.sparkContext.defaultParallelism, "o_custkey")
+        pinned(T(spark, sf, "orders"), "o_custkey")
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= 3)
         .select("o_custkey", "o_orderkey", "o_totalprice")

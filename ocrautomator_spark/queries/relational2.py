@@ -7,7 +7,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ocrautomator_spark.queries.common import T, davg, davg_sql, dsum, dsum_sql, q
+from ocrautomator_spark.queries.common import T, davg, davg_sql, dsum, dsum_sql, pinned, q
 
 
 @q(
@@ -244,21 +244,14 @@ def join_range_binned(spark: SparkSession, sf: str) -> DataFrame:
     iv = p.select(
         p.p_partkey.alias("iv_id"), lo.alias("lo"), (lo + width).alias("hi")
     )
-    # Pinned-count repartition of the probe side on the join key (r7): the
-    # bin join fans out ~25 interval matches per probe row and feeds decimal
-    # partial aggs, so its per-byte compute is high while its shuffle bytes
-    # are tiny — AQE's bytes-only coalescing would fold the join stage onto
-    # one core. A keyed repartition at an explicit count IS the join's
-    # exchange but is exempt from coalescing. Only the probe side is
-    # pinned: the interval side is small enough for AQE to broadcast, and
-    # a shuffle under a broadcast build spreads rows that the build then
-    # gathers into one hash table anyway.
+    # the bin join fans out ~25 interval matches per probe row. Only the
+    # probe side is pinned: the interval side is small enough for AQE to
+    # broadcast, and a shuffle under a broadcast build spreads rows that the
+    # build then gathers into one hash table anyway.
     iv_binned = iv.withColumn(
         "bin", F.explode(F.sequence(F.floor(F.col("lo") / _RJ_BIN), F.floor(F.col("hi") / _RJ_BIN)))
     )
-    ev_binned = e.withColumn("bin", F.floor(F.col("value") / _RJ_BIN)).repartition(
-        spark.sparkContext.defaultParallelism, "bin"
-    )
+    ev_binned = pinned(e.withColumn("bin", F.floor(F.col("value") / _RJ_BIN)), "bin")
     return (
         ev_binned.join(iv_binned, "bin")
         .filter((F.col("value") >= F.col("lo")) & (F.col("value") < F.col("hi")))

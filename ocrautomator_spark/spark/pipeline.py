@@ -79,14 +79,12 @@ def run_pipeline(
     n_buckets: int = 8,
     n_partitions: int | None = None,
     run_id: str | None = None,
-    fail_after: int | None = None,  # test hook: simulate a crash mid-run
     max_concurrent: int = 1,
 ) -> list[dict]:
     """Extract ``input_df`` chunk-by-chunk with atomic per-chunk commits.
 
     Returns the manifests of chunks committed BY THIS CALL. Already-committed
-    buckets are skipped (resume). Raises RuntimeError after ``fail_after``
-    commits when the test hook is set.
+    buckets are skipped (resume).
 
     ``max_concurrent`` > 1 submits that many chunk jobs at once from driver
     threads (Spark's scheduler interleaves their tasks — FAIR pool on a real
@@ -107,12 +105,7 @@ def run_pipeline(
     n_partitions = n_partitions or extract_partitions(input_df)
 
     if max_concurrent <= 1:
-        committed: list[dict] = []
-        for b in todo:
-            if fail_after is not None and len(committed) >= fail_after:
-                raise RuntimeError(f"simulated crash after {fail_after} chunk commits")
-            committed.append(_run_chunk(with_bucket, io, b, n_partitions, run_id))
-        return committed
+        return [_run_chunk(with_bucket, io, b, n_partitions, run_id) for b in todo]
 
     from concurrent.futures import ThreadPoolExecutor
 
@@ -124,15 +117,11 @@ def run_pipeline(
     # wrap clones the properties once and installs that same object in the
     # thread it runs on, so one shared wrap lets a chunk's description
     # overwrite its neighbour's
-    limit = len(todo) if fail_after is None else min(fail_after, len(todo))
     with ThreadPoolExecutor(max_workers=max_concurrent) as pool:
         futures = [
             pool.submit(
                 inheritable_thread_target(input_df.sparkSession)(_run_chunk), with_bucket, io, b, n_partitions, run_id
             )
-            for b in todo[:limit]
+            for b in todo
         ]
-        committed = [f.result() for f in futures]
-    if fail_after is not None and len(todo) > fail_after:
-        raise RuntimeError(f"simulated crash after {fail_after} chunk commits")
-    return committed
+        return [f.result() for f in futures]

@@ -28,6 +28,19 @@ def _sorted_rows(df):
     ]
 
 
+class _CrashOnThirdCommit(ParquetManifestIO):
+    """Dies in its third ``commit_bucket``, after that chunk's data files
+    are written and before its manifest lands."""
+
+    commits = 0
+
+    def commit_bucket(self, bucket, run_id, stats=None):
+        self.commits += 1
+        if self.commits == 3:
+            raise RuntimeError(f"simulated crash before committing bucket {bucket}")
+        return super().commit_bucket(bucket, run_id, stats)
+
+
 def test_resume_equals_fresh(spark, tmp_path):
     inp = synth_transcripts_df(spark, N_CONVS)
 
@@ -37,20 +50,29 @@ def test_resume_equals_fresh(spark, tmp_path):
     fresh_rows = _sorted_rows(fresh_io.read(spark))
     assert len(fresh_rows) == inp.count()
 
-    # crashed run: commits 2 chunks then dies
-    crash_io = ParquetManifestIO(str(tmp_path / "crash"))
+    # crashed run: commits 2 chunks, writes the third chunk's data, then dies
+    # before its manifest lands
+    crash_io = _CrashOnThirdCommit(str(tmp_path / "crash"))
     with pytest.raises(RuntimeError, match="simulated crash"):
-        run_pipeline(inp, crash_io, n_buckets=N_BUCKETS, n_partitions=4, run_id="run1", fail_after=2)
-    assert len(crash_io.committed_buckets()) == 2
+        run_pipeline(inp, crash_io, n_buckets=N_BUCKETS, n_partitions=4, run_id="run1")
+    done = crash_io.committed_buckets()
+    assert len(done) == 2
+    (orphan,) = [d for d in crash_io.data_dir.iterdir() if int(d.name.split("=")[1]) not in done]
+    orphan_files = {f.name for f in orphan.glob("*.parquet")}
+    assert orphan_files
 
     # resume: only the missing 4 chunks run, under a new run_id
-    resumed = run_pipeline(inp, crash_io, n_buckets=N_BUCKETS, n_partitions=4, run_id="run2")
+    resume_io = ParquetManifestIO(str(tmp_path / "crash"))
+    resumed = run_pipeline(inp, resume_io, n_buckets=N_BUCKETS, n_partitions=4, run_id="run2")
     assert len(resumed) == N_BUCKETS - 2
     assert {m["run_id"] for m in resumed} == {"run2"}
-    by_run = {m["run_id"] for m in crash_io.manifests()}
+    by_run = {m["run_id"] for m in resume_io.manifests()}
     assert by_run == {"run1", "run2"}, "committed chunks must NOT be recomputed"
+    # the orphaned, uncommitted directory is overwritten, not appended to
+    assert str(orphan) in {m["path"] for m in resumed}
+    assert orphan_files.isdisjoint(f.name for f in orphan.glob("*.parquet"))
 
-    assert _sorted_rows(crash_io.read(spark)) == fresh_rows
+    assert _sorted_rows(resume_io.read(spark)) == fresh_rows
 
 
 def test_manifest_metrics_and_lineage(spark, tmp_path):

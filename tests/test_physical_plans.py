@@ -8,12 +8,15 @@ exactly ONE exchange in the extract job.
 
 from __future__ import annotations
 
+import contextlib
+import io
+import pathlib
 import re
 
 import pytest
 from pyspark.sql import functions as F
 
-from ocrautomator_spark.queries import QUERIES
+from ocrautomator_spark.queries import QUERIES, common
 from ocrautomator_spark.queries.pipeline_ops import _rk_matched_windows
 from ocrautomator_spark.spark.extract_job import flagship, run_extract
 from ocrautomator_spark.spark.synth_job import synth_transcripts_df
@@ -21,9 +24,6 @@ from tests.conftest import SF_DIR
 
 
 def _plan(df) -> str:
-    import contextlib
-    import io
-
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
@@ -340,3 +340,35 @@ def test_pagerank_plan_shape(spark):
     assert "CartesianProduct" not in plan
     assert "TakeOrderedAndProject" in plan
     assert "partial_" in plan
+
+
+# (registry entry, the key its stage exchange is pinned on)
+PINNED = [
+    ("conv_merge_runs", "conv_id"),
+    ("events_sessionize", "user_id"),
+    ("join_asof", "k"),
+    ("win_rank", "o_custkey"),
+    ("topk_per_group", "o_custkey"),
+    ("join_range_binned", "bin"),  # the probe side only
+    ("dedup_substring_windows", "h"),
+]
+
+
+@pytest.mark.parametrize("name,key", PINNED, ids=[p[0] for p in PINNED])
+def test_pinned_exchange_count(spark, name, key):
+    """Each keyed stage exchange is pinned at one partition per core."""
+    found = re.findall(
+        rf"hashpartitioning\({key}#\d+L?, (\d+)\), REPARTITION_BY_NUM", _plan(QUERIES[name](spark, SF_DIR))
+    )
+    assert found, f"no pinned exchange on {key}"
+    assert {int(n) for n in found} == {spark.sparkContext.defaultParallelism}
+
+
+def test_pinned_count_decided_in_one_module():
+    """Only queries/common.py sizes an exchange by the core count."""
+    qdir = pathlib.Path(common.__file__).parent
+    offenders = [
+        str(p.relative_to(qdir)) for p in sorted(qdir.rglob("*.py"))
+        if p.name != "common.py" and "defaultParallelism" in p.read_text()
+    ]
+    assert offenders == []

@@ -1,10 +1,13 @@
 """Streaming extraction ≡ batch extraction: the same kernel through
 readStream must produce exactly the batch job's rows, including when the
-input arrives as MULTIPLE files (micro-batch boundaries must not matter)."""
+input arrives as MULTIPLE files (micro-batch boundaries must not matter),
+and a NULL-text turn comes out as an ``error`` row on both paths."""
 
 from __future__ import annotations
 
 import uuid
+
+from pyspark.sql import functions as F
 
 from ocrautomator_spark.spark.extract_job import run_extract
 from ocrautomator_spark.spark.schemas import TRANSCRIPTS
@@ -24,11 +27,24 @@ def _key_rows(df):
     )
 
 
+def _null_rows(df):
+    return [(r["payload_kind"], r["n_chars_in"]) for r in df.filter(F.col("conv_id") == "c-null").collect()]
+
+
 def test_streaming_extract_equals_batch(spark, tmp_path):
     inp = str(tmp_path / "in")
-    synth_transcripts_df(spark, 25).repartition(6).write.parquet(inp)  # 6 files → file-source batches
+    synth = synth_transcripts_df(spark, 25)
+    synth.repartition(6).write.parquet(inp)  # 6 files → file-source batches
+    # one more file holding one NULL-text turn: it must come out as an error
+    # row, not fail the micro-batch
+    synth.limit(1).select(
+        F.lit("c-null").alias("conv_id"),
+        *[F.lit(None).cast("string").alias(c) if c == "text" else F.col(c) for c in synth.columns[1:]],
+    ).coalesce(1).write.mode("append").parquet(inp)
 
-    batch_rows = _key_rows(run_extract(spark.read.parquet(inp), n_partitions=4))
+    batch = run_extract(spark.read.parquet(inp), n_partitions=4)
+    batch_rows = _key_rows(batch)
+    assert _null_rows(batch) == [("error", 0)]
 
     name = f"sx_{uuid.uuid4().hex[:8]}"
     q = (
@@ -43,6 +59,8 @@ def test_streaming_extract_equals_batch(spark, tmp_path):
         q.processAllAvailable()
     finally:
         q.stop()
-    stream_rows = _key_rows(spark.table(name))
+    streamed = spark.table(name)
+    stream_rows = _key_rows(streamed)
     assert stream_rows == batch_rows
+    assert _null_rows(streamed) == [("error", 0)]
     assert len(stream_rows) == spark.read.parquet(inp).count()
