@@ -21,12 +21,13 @@ from ocrautomator_spark.spark import worker_daemon
 # and pandas_udf in the session). The extract job runs one mapInArrow task
 # per core (extract_partitions), so each worker streams its whole share of a
 # chunk, and its peak memory grows with the batch size. Peak Python PSS of
-# the 80 000-turn perfbench backfill at local[2] on a 4-core box, workers on
-# the zip-free daemon: 235-237 MB at 2048 rows (20 runs), 248-249 MB at 4096,
-# 271-272 MB at 10 000 (2 runs each), walls 2.3-2.9 s at 2048 and 4096 and
-# 2.7-3.1 s at 10 000. The Arrow/pandas headline queries (pipeline_e2e,
-# extract_flagship, dedup_substring_windows_rk) were as fast or faster at
-# 2048 as at 10 000 rows on sf 0.05 and sf 0.4 tables.
+# the 80 000-turn perfbench backfill at local[2] on a 4-core box, measured
+# on the zip-free daemon before it preloaded the worker stack: 4096 rows
+# held ~12 MB more than 2048 and 10 000 rows ~35 MB more; walls were the
+# same at 2048 and 4096 and ~0.3 s longer at 10 000. The Arrow/pandas
+# headline queries (pipeline_e2e, extract_flagship,
+# dedup_substring_windows_rk) were as fast or faster at 2048 as at 10 000
+# rows on sf 0.05 and sf 0.4 tables.
 ARROW_BATCH_ROWS = 2048
 
 

@@ -6,13 +6,25 @@ spark-core jar on ``PYTHONPATH``. Every task calls
 ``importlib.invalidate_caches()``, which re-reads the central directory of
 every archive behind a cached zipimporter, and the zip's pyspark ships no
 bytecode. When the same pyspark version is installed outside the archives,
-this module drops the archives from the import system and then runs the
-stock ``pyspark.daemon``; otherwise it runs the stock daemon unchanged.
-``get_spark`` selects it through ``spark.python.daemon.module``.
+this module drops the archives from the import system; otherwise it keeps
+Spark's import path.
+
+Either way it then imports the workers' stack once (``pyspark.worker``,
+pandas when installed, and the extract job with pyarrow.compute and the
+kernel) and calls ``gc.freeze()`` before it runs the stock
+``pyspark.daemon``. Every worker is a fork of this process, so it shares
+those pages copy-on-write instead of importing its own copy. The freeze
+keeps them shared: after each task the daemon's child runs
+``gc.collect()``, which writes to the header of every object it scans,
+and the collector never scans a frozen object. The daemon runs no Arrow
+compute and starts no Python thread before it forks.
+``get_spark`` selects this module through ``spark.python.daemon.module``.
 """
 
 from __future__ import annotations
 
+import gc
+import importlib.util
 import os
 import re
 import runpy
@@ -79,10 +91,27 @@ def _drop_archives(path: list[str]) -> None:
             del sys.modules[name]
 
 
+def preload() -> None:
+    """Import what every worker imports, then freeze it out of the collector.
+
+    ``pyspark.daemon`` imports ``pyspark.worker`` only once it runs, after
+    the freeze, so it is imported here. pyarrow imports pandas on the first
+    array it builds from Python objects (the extract job's ``fill_null``).
+    """
+    import pyspark.worker  # noqa: F401
+
+    if importlib.util.find_spec("pandas") is not None:
+        import pandas  # noqa: F401
+    import ocrautomator_spark.spark.extract_job  # noqa: F401
+
+    gc.freeze()
+
+
 def main() -> None:
     path = archive_free_path(sys.path)
     if path is not None:
         _drop_archives(path)
+    preload()
     runpy.run_module("pyspark.daemon", run_name="__main__", alter_sys=True)
 
 

@@ -43,6 +43,8 @@ def main(argv: list[str] | None = None) -> int:
         help="chunk jobs submitted in parallel (2-4 keeps a large cluster saturated)",
     )
     args = p.parse_args(argv)
+    if not (args.synth_convs or args.input):
+        p.error("one of --input / --synth-convs is required")
 
     from ocrautomator_spark.spark.pipeline import run_pipeline
     from ocrautomator_spark.spark.session import get_spark
@@ -52,10 +54,8 @@ def main(argv: list[str] | None = None) -> int:
     spark = get_spark(master=args.master, app_name="ocrautomator-extract")
     if args.synth_convs:
         df = synth_transcripts_df(spark, args.synth_convs)
-    elif args.input:
-        df = spark.read.parquet(args.input)
     else:
-        p.error("one of --input / --synth-convs is required")
+        df = spark.read.parquet(args.input)
 
     io = ParquetManifestIO(args.output)
     done_before = len(io.committed_buckets())

@@ -11,6 +11,8 @@ import threading
 
 import pytest
 
+from ocrautomator_spark import submit
+from ocrautomator_spark.spark import session
 from ocrautomator_spark.spark.pipeline import run_pipeline
 from ocrautomator_spark.spark.synth_job import synth_transcripts_df
 from ocrautomator_spark.spark.tableio import ParquetManifestIO
@@ -39,6 +41,19 @@ class _CrashOnThirdCommit(ParquetManifestIO):
         if self.commits == 3:
             raise RuntimeError(f"simulated crash before committing bucket {bucket}")
         return super().commit_bucket(bucket, run_id, stats)
+
+
+def test_submit_without_input_fails_before_starting_spark(monkeypatch, tmp_path):
+    """Neither --input nor --synth-convs is an argparse error (exit 2) raised
+    before any JVM starts, so no session is left unstopped."""
+
+    def no_spark(*args, **kwargs):
+        raise AssertionError("get_spark called before the arguments were validated")
+
+    monkeypatch.setattr(session, "get_spark", no_spark)
+    with pytest.raises(SystemExit) as exc:
+        submit.main(["--output", str(tmp_path / "out")])
+    assert exc.value.code == 2
 
 
 def test_resume_equals_fresh(spark, tmp_path):

@@ -1,21 +1,27 @@
-"""The zip-free Python worker daemon (spark/worker_daemon.py) and the guard
-that selects it in ``get_spark``.
+"""The zip-free, preloading Python worker daemon (spark/worker_daemon.py)
+and the guard that selects it in ``get_spark``.
 
 A stock worker imports pyspark from Spark's pyspark.zip with the spark-core
-jar on its path, and re-reads every archive's directory on each task. The
-first test checks, inside a real worker, that neither is left; the rest
-check the fallbacks without Spark."""
+jar on its path, re-reads every archive's directory on each task, and
+imports its own copy of the extract stack. The first two tests check,
+inside a real worker, that neither archive is left and that the worker was
+forked from a daemon that preloaded and froze that stack; the rest check
+the preload and the fallbacks without Spark."""
 
 from __future__ import annotations
 
 import json
+import os
 import re
+import subprocess
+import sys
 import zipfile
 
 import pyarrow as pa
 import pyspark
 import pytest
 
+import ocrautomator_spark
 from ocrautomator_spark.spark.session import worker_daemon_reachable
 from ocrautomator_spark.spark.worker_daemon import archive_free_path
 
@@ -56,6 +62,68 @@ def test_python_worker_imports_site_pyspark(spark):
     assert origin["version"] == pyspark.__version__
     assert origin["zipimporters"] == []
     assert origin["archive_packages"] == []
+
+
+def _daemon_state(it):
+    """The worker's frozen-object count (inherited from the daemon at fork)
+    and the names of the daemon's threads other than its main thread."""
+    import gc
+    import os
+
+    daemon = str(os.getppid())
+    tasks = f"/proc/{daemon}/task"
+    threads = sorted(open(f"{tasks}/{t}/comm").read().strip() for t in os.listdir(tasks) if t != daemon)
+    for _ in it:
+        pass
+    yield pa.RecordBatch.from_pydict({"state": [json.dumps({"frozen": gc.get_freeze_count(), "threads": threads})]})
+
+
+def test_python_worker_forks_from_preloaded_daemon(spark):
+    """The daemon imported the extract stack and froze it before forking:
+    the worker inherits the frozen objects, and the daemon runs no thread
+    but its main one and the allocator thread that importing pyarrow
+    starts when Arrow allocates through jemalloc."""
+    (row,) = spark.range(1, numPartitions=1).mapInArrow(_daemon_state, "state string").collect()
+    state = json.loads(row.state)
+    assert state["frozen"] > 0
+    jemalloc = pa.default_memory_pool().backend_name == "jemalloc"
+    assert state["threads"] == (["jemalloc_bg_thd"] if jemalloc else [])
+
+
+_PRELOAD = """
+import gc, json, sys, threading
+{setup}
+from ocrautomator_spark.spark.worker_daemon import preload
+preload()
+mods = ("pyspark.worker", "pandas", "ocrautomator_spark.spark.extract_job")
+print(json.dumps({{
+    "loaded": [m for m in mods if sys.modules.get(m) is not None],
+    "frozen": gc.get_freeze_count(),
+    "threads": threading.active_count(),
+}}))
+"""
+
+
+@pytest.mark.parametrize(
+    "setup, loaded",
+    [
+        pytest.param("", ["pyspark.worker", "pandas", "ocrautomator_spark.spark.extract_job"], id="with-pandas"),
+        pytest.param('sys.modules["pandas"] = None', ["pyspark.worker", "ocrautomator_spark.spark.extract_job"], id="without-pandas"),
+    ],
+)
+def test_preload_imports_and_freezes_worker_stack(setup, loaded):
+    """``preload`` leaves the worker stack imported and frozen, with no
+    Python thread besides the main one (the daemon forks right after), and
+    it still succeeds when pandas cannot be imported."""
+    out = subprocess.run(
+        [sys.executable, "-c", _PRELOAD.format(setup=setup)],
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(ocrautomator_spark.__file__))),
+        capture_output=True, text=True, check=True,
+    ).stdout
+    state = json.loads(out.splitlines()[-1])
+    assert state["loaded"] == loaded
+    assert state["frozen"] > 0
+    assert state["threads"] == 1
 
 
 def _site(tmp_path, version="4.1.2", pyspark=True, py4j=True) -> str:
