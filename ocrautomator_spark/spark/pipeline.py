@@ -13,14 +13,18 @@ Per-chunk metrics (rows, rows per payload kind, chars, error count, batch
 latency) come from ``df.observe`` — Spark's accumulator path, i.e. zero
 extra actions — and are persisted INTO the manifest: the rebuild of the
 reference's live stats display (A13) as durable run metadata, next to the
-chunk's partition count (``n_partitions``).
+chunk's partition count (``n_partitions``) and the number of chunks the run
+kept in flight (``max_concurrent``).
 """
 
 from __future__ import annotations
 
 import time
 import uuid
+from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
+from itertools import islice
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
@@ -36,7 +40,9 @@ def bucket_of(n_buckets: int):
     return F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
 
 
-def _run_chunk(with_bucket: DataFrame, io: ParquetManifestIO, b: int, n_partitions: int, run_id: str) -> dict:
+def _run_chunk(
+    with_bucket: DataFrame, io: ParquetManifestIO, b: int, n_partitions: int, run_id: str, max_concurrent: int
+) -> dict:
     chunk = with_bucket.filter(F.col(BUCKET_COL) == b).drop(BUCKET_COL)
     obs = Observation(f"extract_{run_id}_b{b}")
     ext = run_extract(chunk, n_partitions=n_partitions).observe(
@@ -70,6 +76,7 @@ def _run_chunk(with_bucket: DataFrame, io: ParquetManifestIO, b: int, n_partitio
     stats["rows_by_kind"] = {k: int(by_kind[k]) for k in PAYLOAD_KINDS}
     stats["wall_sec"] = round(wall, 3)
     stats["n_partitions"] = n_partitions
+    stats["max_concurrent"] = max_concurrent
     return io.commit_bucket(b, run_id, stats)
 
 
@@ -79,37 +86,41 @@ def run_pipeline(
     n_buckets: int = 8,
     n_partitions: int | None = None,
     run_id: str | None = None,
-    max_concurrent: int = 1,
+    max_concurrent: int = 2,
 ) -> list[dict]:
     """Extract ``input_df`` chunk-by-chunk with atomic per-chunk commits.
 
-    Returns the manifests of chunks committed BY THIS CALL. Already-committed
-    buckets are skipped (resume).
+    Returns the manifests of chunks committed BY THIS CALL, in bucket order.
+    Already-committed buckets are skipped (resume).
 
-    ``max_concurrent`` > 1 submits that many chunk jobs at once from driver
-    threads (Spark's scheduler interleaves their tasks — FAIR pool on a real
-    cluster); each chunk job runs under the caller's Spark local properties
-    (job group, description, ``spark.scheduler.pool``) and job tags. Serial
-    chunks leave executors idle during each job's tail; a small concurrency
-    (2–4) keeps a 1000-executor cluster saturated while preserving the
-    per-chunk commit/retry granularity.
+    Chunk jobs run from a pool of ``max_concurrent`` driver threads, and at
+    most that many are in flight: a chunk is submitted only when an earlier
+    one has committed. The default of two double-buffers the run. One
+    chunk's Python stage already has one task per core, so it fills every
+    slot; the next chunk's job planning, input scan, salted exchange, AQE
+    re-plan, observation fetch and commit then run in its gaps and tail
+    instead of between the two. More than two pays only where a chunk's
+    tasks do not fill the cluster (Spark's scheduler interleaves the jobs;
+    FAIR pool on a real cluster). ``max_concurrent=1`` runs chunks one after
+    another. Each chunk job runs under the caller's Spark local properties
+    (job group, description, ``spark.scheduler.pool``) and job tags.
+
+    On the first chunk error no further chunk starts; chunks already in
+    flight finish and commit (each commit stays exactly-once), then that
+    error is raised. A rerun resumes from what committed.
 
     ``n_partitions`` (the Python stage's task count per chunk) defaults to
     ``extract_partitions(input_df)``, one task per core, computed once per
-    run and recorded in every chunk's manifest.
+    run and recorded in every chunk's manifest with the window
+    (``max_concurrent``). A manifest's ``wall_sec`` overlaps its neighbours'
+    when the window is above one, so summed chunk walls overstate the run.
     """
     run_id = run_id or uuid.uuid4().hex[:12]
     done = io.committed_buckets()
     with_bucket = input_df.withColumn(BUCKET_COL, bucket_of(n_buckets))
-    todo = [b for b in range(n_buckets) if b not in done]
+    todo = (b for b in range(n_buckets) if b not in done)
     n_partitions = n_partitions or extract_partitions(input_df)
-
-    if max_concurrent <= 1:
-        return [_run_chunk(with_bucket, io, b, n_partitions, run_id) for b in todo]
-
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
+    committed: dict[int, dict] = {}
 
     # pool threads start with no Spark local properties (pinned-thread
     # mode): the wrapper carries the caller's job group, description,
@@ -117,11 +128,18 @@ def run_pipeline(
     # wrap clones the properties once and installs that same object in the
     # thread it runs on, so one shared wrap lets a chunk's description
     # overwrite its neighbour's
+    def submit(pool: ThreadPoolExecutor, b: int) -> Future:
+        chunk = inheritable_thread_target(input_df.sparkSession)(_run_chunk)
+        return pool.submit(chunk, with_bucket, io, b, n_partitions, run_id, max_concurrent)
+
+    # submit as the window frees, not all up front: no chunk waits in the
+    # pool's queue, so none starts after a failure has been seen, and leaving
+    # the block on an error waits only for the chunks in flight
     with ThreadPoolExecutor(max_workers=max_concurrent) as pool:
-        futures = [
-            pool.submit(
-                inheritable_thread_target(input_df.sparkSession)(_run_chunk), with_bucket, io, b, n_partitions, run_id
-            )
-            for b in todo
-        ]
-        return [f.result() for f in futures]
+        running = {submit(pool, b): b for b in islice(todo, max_concurrent)}
+        while running:
+            finished, _ = wait(running, return_when=FIRST_COMPLETED)
+            for f in finished:
+                committed[running.pop(f)] = f.result()
+            running.update({submit(pool, b): b for b in islice(todo, len(finished))})
+    return [committed[b] for b in sorted(committed)]

@@ -17,6 +17,12 @@ Local sandbox twin (what the tests exercise):
 The job is restartable: rerunning with the same --output resumes from the
 committed per-bucket manifests (ocrAutomator's resume file, rebuilt —
 SURVEY.md §2A A10). On Iceberg, each bucket commit is one append snapshot.
+
+Two chunk jobs are in flight by default (``--concurrency``, the same default
+as ``run_pipeline``). One chunk's Python stage has one task per core and fills
+every slot, so the second chunk's planning, input scan, exchange and commit
+run behind it instead of leaving the slots idle between chunks, like the
+reference's worker queue that never lets a worker wait between documents.
 """
 
 from __future__ import annotations
@@ -39,12 +45,16 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--master", default=None, help="override master (default: existing session/local)")
     p.add_argument("--run-id", default=None)
     p.add_argument(
-        "--concurrency", type=int, default=1,
-        help="chunk jobs submitted in parallel (2-4 keeps a large cluster saturated)",
+        "--concurrency", type=int, default=None,
+        help="chunk jobs in flight at once (default 2: one chunk's Python stage fills every "
+        "task slot, the next chunk's scan, exchange and commit run behind it; 1 runs chunks "
+        "one after another; more pays only where one chunk's tasks leave slots free)",
     )
     args = p.parse_args(argv)
     if not (args.synth_convs or args.input):
         p.error("one of --input / --synth-convs is required")
+    if args.concurrency is not None and args.concurrency < 1:
+        p.error("--concurrency must be at least 1")
 
     from ocrautomator_spark.spark.pipeline import run_pipeline
     from ocrautomator_spark.spark.session import get_spark
@@ -59,9 +69,9 @@ def main(argv: list[str] | None = None) -> int:
 
     io = ParquetManifestIO(args.output)
     done_before = len(io.committed_buckets())
+    window = {} if args.concurrency is None else {"max_concurrent": args.concurrency}
     manifests = run_pipeline(
-        df, io, n_buckets=args.buckets, n_partitions=args.partitions,
-        run_id=args.run_id, max_concurrent=args.concurrency,
+        df, io, n_buckets=args.buckets, n_partitions=args.partitions, run_id=args.run_id, **window
     )
     summary = {
         "resumed_from": done_before,

@@ -32,14 +32,41 @@ def _sorted_rows(df):
 
 class _CrashOnThirdCommit(ParquetManifestIO):
     """Dies in its third ``commit_bucket``, after that chunk's data files
-    are written and before its manifest lands."""
+    are written and before its manifest lands. The count is locked: chunks
+    in flight together commit from different threads."""
 
-    commits = 0
+    def __init__(self, root: str) -> None:
+        super().__init__(root)
+        self.commits = 0
+        self.lock = threading.Lock()
 
     def commit_bucket(self, bucket, run_id, stats=None):
-        self.commits += 1
-        if self.commits == 3:
+        with self.lock:
+            self.commits += 1
+            crash = self.commits == 3
+        if crash:
             raise RuntimeError(f"simulated crash before committing bucket {bucket}")
+        return super().commit_bucket(bucket, run_id, stats)
+
+
+class _FailBucketZero(ParquetManifestIO):
+    """``commit_bucket`` raises for bucket 0. Every other chunk's data write
+    waits until that has happened, so the chunks in flight at the failure
+    are exactly the window's first ones."""
+
+    def __init__(self, root: str) -> None:
+        super().__init__(root)
+        self.failed = threading.Event()
+
+    def write_bucket_data(self, df, bucket: int) -> str:
+        if bucket != 0:
+            self.failed.wait(timeout=120)
+        return super().write_bucket_data(df, bucket)
+
+    def commit_bucket(self, bucket, run_id, stats=None):
+        if bucket == 0:
+            self.failed.set()
+            raise RuntimeError("simulated failure committing bucket 0")
         return super().commit_bucket(bucket, run_id, stats)
 
 
@@ -56,6 +83,16 @@ def test_submit_without_input_fails_before_starting_spark(monkeypatch, tmp_path)
     assert exc.value.code == 2
 
 
+def test_submit_window_below_one_fails_before_starting_spark(monkeypatch, tmp_path):
+    def no_spark(*args, **kwargs):
+        raise AssertionError("get_spark called before the arguments were validated")
+
+    monkeypatch.setattr(session, "get_spark", no_spark)
+    with pytest.raises(SystemExit) as exc:
+        submit.main(["--output", str(tmp_path / "out"), "--synth-convs", "5", "--concurrency", "0"])
+    assert exc.value.code == 2
+
+
 def test_resume_equals_fresh(spark, tmp_path):
     inp = synth_transcripts_df(spark, N_CONVS)
 
@@ -69,7 +106,7 @@ def test_resume_equals_fresh(spark, tmp_path):
     # before its manifest lands
     crash_io = _CrashOnThirdCommit(str(tmp_path / "crash"))
     with pytest.raises(RuntimeError, match="simulated crash"):
-        run_pipeline(inp, crash_io, n_buckets=N_BUCKETS, n_partitions=4, run_id="run1")
+        run_pipeline(inp, crash_io, n_buckets=N_BUCKETS, n_partitions=4, run_id="run1", max_concurrent=1)
     done = crash_io.committed_buckets()
     assert len(done) == 2
     (orphan,) = [d for d in crash_io.data_dir.iterdir() if int(d.name.split("=")[1]) not in done]
@@ -78,7 +115,7 @@ def test_resume_equals_fresh(spark, tmp_path):
 
     # resume: only the missing 4 chunks run, under a new run_id
     resume_io = ParquetManifestIO(str(tmp_path / "crash"))
-    resumed = run_pipeline(inp, resume_io, n_buckets=N_BUCKETS, n_partitions=4, run_id="run2")
+    resumed = run_pipeline(inp, resume_io, n_buckets=N_BUCKETS, n_partitions=4, run_id="run2", max_concurrent=1)
     assert len(resumed) == N_BUCKETS - 2
     assert {m["run_id"] for m in resumed} == {"run2"}
     by_run = {m["run_id"] for m in resume_io.manifests()}
@@ -88,6 +125,55 @@ def test_resume_equals_fresh(spark, tmp_path):
     assert orphan_files.isdisjoint(f.name for f in orphan.glob("*.parquet"))
 
     assert _sorted_rows(resume_io.read(spark)) == fresh_rows
+
+
+def test_resume_equals_fresh_with_chunks_in_flight(spark, tmp_path):
+    """The crash contract at the default window: the chunk in flight beside
+    the crashed one may still commit, so the crash leaves at least two
+    buckets committed; the resume commits exactly the rest, recomputes none
+    of them, and the rows equal a fresh run's."""
+    inp = synth_transcripts_df(spark, N_CONVS)
+    fresh_io = ParquetManifestIO(str(tmp_path / "fresh"))
+    run_pipeline(inp, fresh_io, n_buckets=N_BUCKETS, n_partitions=4, run_id="fresh")
+
+    crash_io = _CrashOnThirdCommit(str(tmp_path / "crash"))
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        run_pipeline(inp, crash_io, n_buckets=N_BUCKETS, n_partitions=4, run_id="run1")
+    done = crash_io.committed_buckets()
+    assert 2 <= len(done) < N_BUCKETS
+
+    resume_io = ParquetManifestIO(str(tmp_path / "crash"))
+    resumed = run_pipeline(inp, resume_io, n_buckets=N_BUCKETS, n_partitions=4, run_id="run2")
+    resumed_buckets = [m["bucket"] for m in resumed]
+    assert len(resumed_buckets) == len(set(resumed_buckets)), "a bucket committed twice"
+    assert done.isdisjoint(resumed_buckets), "committed chunks must NOT be recomputed"
+    assert done | set(resumed_buckets) == set(range(N_BUCKETS))
+    by_bucket = {m["bucket"]: m["run_id"] for m in resume_io.manifests()}
+    assert by_bucket == {b: ("run1" if b in done else "run2") for b in range(N_BUCKETS)}
+
+    assert _sorted_rows(resume_io.read(spark)) == _sorted_rows(fresh_io.read(spark))
+
+
+def test_chunk_error_stops_the_run(spark, tmp_path):
+    """At the default window, a chunk error starts no further chunk: only
+    the chunk in flight beside it is written (and commits), the error is
+    raised, and a resume commits the rest with a fresh run's rows."""
+    n_buckets = 8
+    inp = synth_transcripts_df(spark, N_CONVS)
+    io = _FailBucketZero(str(tmp_path / "fail"))
+    with pytest.raises(RuntimeError, match="committing bucket 0"):
+        run_pipeline(inp, io, n_buckets=n_buckets, n_partitions=2, run_id="run1")
+    written = {int(d.name.split("=")[1]) for d in io.data_dir.iterdir()}
+    assert written <= {0, 1}, f"chunks started after the failure: {sorted(written - {0, 1})}"
+    done = io.committed_buckets()
+    assert done == written - {0}
+
+    resume_io = ParquetManifestIO(str(tmp_path / "fail"))
+    resumed = run_pipeline(inp, resume_io, n_buckets=n_buckets, n_partitions=2, run_id="run2")
+    assert [m["bucket"] for m in resumed] == sorted(set(range(n_buckets)) - done)
+    fresh_io = ParquetManifestIO(str(tmp_path / "fresh"))
+    run_pipeline(inp, fresh_io, n_buckets=n_buckets, n_partitions=2, run_id="fresh")
+    assert _sorted_rows(resume_io.read(spark)) == _sorted_rows(fresh_io.read(spark))
 
 
 def test_manifest_metrics_and_lineage(spark, tmp_path):
@@ -102,6 +188,7 @@ def test_manifest_metrics_and_lineage(spark, tmp_path):
         assert m["errors"] == 0
         assert m["avg_batch_latency_ms"] > 0
         assert m["wall_sec"] > 0
+        assert m["max_concurrent"] == 2
         # rows per payload kind: every kind keyed, summing to rows
         assert set(m["rows_by_kind"]) == kinds
         assert sum(m["rows_by_kind"].values()) == m["rows"]
@@ -201,11 +288,11 @@ class _DescriptionIO(ParquetManifestIO):
     them have set theirs, so concurrent chunks that shared one set of local
     properties would see each other's label."""
 
-    def __init__(self, root: str, spark, overlap: int = 1) -> None:
+    def __init__(self, root: str, spark, overlap: int = 1, timeout: float = 120) -> None:
         super().__init__(root)
         self.sc = spark.sparkContext
         self.seen: dict[int, str | None] = {}
-        self.barrier = threading.Barrier(overlap, timeout=120) if overlap > 1 else None
+        self.barrier = threading.Barrier(overlap, timeout=timeout) if overlap > 1 else None
 
     def write_bucket_data(self, df, bucket: int) -> str:
         if self.barrier is not None and bucket < self.barrier.parties:
@@ -233,12 +320,21 @@ def test_chunk_jobs_are_labelled(spark, tmp_path, max_concurrent):
     assert after == "caller"
 
 
+def test_default_keeps_two_chunks_in_flight(spark, tmp_path):
+    """Without ``max_concurrent``, the first two chunks reach their data
+    write together (a serial run would time out the barrier)."""
+    io = _DescriptionIO(str(tmp_path / "dflt"), spark, overlap=2, timeout=30)
+    manifests = run_pipeline(synth_transcripts_df(spark, 12), io, n_buckets=3, n_partitions=2, run_id="dflt")
+    assert [m["bucket"] for m in manifests] == [0, 1, 2]
+    assert io.seen == {b: f"run_pipeline:dflt:b{b}" for b in range(3)}
+
+
 def test_concurrent_chunks_equal_serial(spark, tmp_path):
     """max_concurrent>1 (driver threads submitting chunk jobs in parallel)
     must produce exactly the serial pipeline's output and manifests."""
     inp = synth_transcripts_df(spark, 18)
     serial_io = ParquetManifestIO(str(tmp_path / "ser"))
-    run_pipeline(inp, serial_io, n_buckets=4, n_partitions=4, run_id="s")
+    run_pipeline(inp, serial_io, n_buckets=4, n_partitions=4, run_id="s", max_concurrent=1)
     conc_io = ParquetManifestIO(str(tmp_path / "con"))
     manifests = run_pipeline(inp, conc_io, n_buckets=4, n_partitions=4, run_id="c", max_concurrent=3)
     assert len(manifests) == 4
