@@ -15,8 +15,11 @@ Spark lifecycle (§3.2), one Python crossing total:
                                             vectorized ListArray/StructArray;
                                             single-line ASCII plain turns, most
                                             chat turns, never reach per-row
-                                            Python: Arrow compute extracts them,
-                                            extract_one the rest)
+                                            Python: an ASCII test and one regex
+                                            pick them, Arrow compute extracts
+                                            them and rewrites whitespace only
+                                            in rows that have a run to
+                                            collapse; extract_one the rest)
       → sortWithinPartitions(conv_id, turn_idx)   (A7: stable turn ordering)
       → [caller writes + commits manifest]  (A8/A10, see spark/pipeline.py +
                                             spark/tableio.py ParquetManifestIO)
@@ -60,14 +63,21 @@ _SPAN_TYPE = pa.struct(
 _RESULT_NAMES = ["extracted_text", "spans", "payload_kind"]
 # one run of the ASCII characters that str.split() splits on
 _ASCII_WS_RUN = r"[\t\n\x0b\x0c\r\x1c-\x1f ]+"
+# a char or word that a non-plain or multi-block row needs (_plain_single_block)
+_NOT_PLAIN_BLOCK = r"[<\n\f]|(?i:page)"
+# on a row with no newline or form feed: a whitespace char other than a
+# space, a double space, or a space at either end; a row without one is
+# already " ".join(text.split())
+_WS_TO_COLLAPSE = r"[\t\x0b\r\x1c-\x1f]|  |^ | $"
 
 
 def _plain_single_block(text: pa.Array) -> pa.Array:
     """True where ``extract_one`` provably sniffs the row as plain and
     ``extract_plain`` makes one block of it, so its result is
     ``" ".join(text.split())`` with one span over the whole row. Nulls are
-    false (``extract_one`` reports them as errors). Each clause stands for
-    the ``sniff`` rules (kernel/sniff.py) it rules out:
+    false (``extract_one`` reports them as errors). Two passes: an ASCII
+    test and one ``_NOT_PLAIN_BLOCK`` search. Each alternative of that
+    pattern stands for the ``sniff`` rules (kernel/sniff.py) it rules out:
 
     * ASCII: ``str.split`` whitespace is then exactly ``_ASCII_WS_RUN``, NFC
       is the identity, and no non-ASCII char folds onto a regex letter;
@@ -79,10 +89,7 @@ def _plain_single_block(text: pa.Array) -> pa.Array:
     * no ``\\f`` and no case-insensitive ``page``: the other PDF rules
       (form feed, page-marker line).
     """
-    ok = pc.string_is_ascii(text)
-    for pattern in ("<", "\n", "\f"):
-        ok = pc.and_(ok, pc.invert(pc.match_substring(text, pattern)))
-    ok = pc.and_(ok, pc.invert(pc.match_substring(text, "page", ignore_case=True)))
+    ok = pc.and_(pc.string_is_ascii(text), pc.invert(pc.match_substring_regex(text, _NOT_PLAIN_BLOCK)))
     return pc.fill_null(ok, False)
 
 
@@ -99,8 +106,15 @@ def _extract_plain_rows(text: pa.Array) -> pa.StructArray:
     ``_plain_single_block``, in Arrow compute: whitespace runs become one
     space, the ends are trimmed, and a non-empty result gets the span
     ``(0, len(text), "content")``. A whitespace-only row gets no span, as
-    ``extract_one``'s early return gives it."""
-    extracted = pc.utf8_trim(pc.replace_substring_regex(text, _ASCII_WS_RUN, " "), " ")
+    ``extract_one``'s early return gives it. One ``_WS_TO_COLLAPSE`` search
+    marks the rows that need the rewrite; the rest already equal their
+    result, so the rewrite runs on the marked rows only, and not at all
+    when none is marked (most chat turns)."""
+    marked = pc.match_substring_regex(text, _WS_TO_COLLAPSE)
+    extracted = text
+    if pc.any(marked).as_py():
+        collapsed = pc.utf8_trim(pc.replace_substring_regex(pc.filter(text, marked), _ASCII_WS_RUN, " "), " ")
+        extracted = pc.replace_with_mask(text, marked, collapsed)
     has_span = pc.greater(pc.binary_length(extracted), 0)
     ends = pc.filter(pc.cast(pc.utf8_length(text), pa.int32()), has_span)
     n_spans = len(ends)
@@ -120,14 +134,16 @@ def _extract_plain_rows(text: pa.Array) -> pa.StructArray:
 def _extract_rows(text: pa.Array) -> pa.StructArray:
     """(extracted_text, spans, payload_kind) of any rows, ``extract_one``
     per row. ExtractResult and Span are NamedTuples, so zip(*...) unzips the
-    whole batch at C speed — no per-row/per-span Python append loops."""
+    whole batch at C speed — no per-row/per-span Python append loops. The
+    extracted text takes ``text``'s type, as ``_extract_plain_rows``' does,
+    so the two concatenate under large Arrow string types too."""
     results = [extract_one(t) for t in text.to_pylist()]
     ext_texts, span_lists, pks = zip(*results) if results else ((), (), ())
     flat_spans = [s for spans in span_lists for s in spans]
     starts, ends, kinds = zip(*flat_spans) if flat_spans else ((), (), ())
     offsets = pa.array(list(accumulate(map(len, span_lists), initial=0)), pa.int32())
     return pa.StructArray.from_arrays(
-        [pa.array(ext_texts, pa.string()), _span_lists(offsets, starts, ends, kinds), pa.array(pks, pa.string())],
+        [pa.array(ext_texts, text.type), _span_lists(offsets, starts, ends, kinds), pa.array(pks, pa.string())],
         names=_RESULT_NAMES,
     )
 

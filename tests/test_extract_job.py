@@ -4,7 +4,10 @@ and ``extract_batches`` against ``extract_one`` row for row."""
 
 from __future__ import annotations
 
+from itertools import cycle
+
 import pyarrow as pa
+import pyarrow.compute as pc
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -13,6 +16,7 @@ from pyspark.sql import functions as F
 from ocrautomator_spark.kernel import EXTRACTOR_VERSION
 from ocrautomator_spark.kernel.extractor import extract_one
 from ocrautomator_spark.spark.extract_job import (
+    _WS_TO_COLLAPSE,
     _plain_single_block,
     extract_batches,
     extract_partitions,
@@ -148,6 +152,9 @@ def test_extract_partitions_stream_falls_back_to_shuffle_partitions(spark, tmp_p
 _ASCII_WS = "\t\n\x0b\x0c\r\x1c\x1d\x1e\x1f "
 # whitespace to str.split() but not to the Arrow fast path's regex
 _OTHER_WS = "\x85\xa0　"
+# fast rows with one trigger each of the whitespace rewrite: a leading
+# space, a trailing space, a double space, a lone non-space whitespace char
+GUARD_ROWS = [" ab", "ab ", "a  b", *(f"ab{w}cd" for w in "\t\x0b\r\x1c\x1d\x1e\x1f")]
 EDGE_ROWS = [
     None,
     "",
@@ -166,12 +173,30 @@ EDGE_ROWS = [
     "# h\n# g",
     "<p>one</p><p>two</p>",
     "plain words  and\trun",
+    *GUARD_ROWS,
 ]
 FAST_ROWS = ["", " ", "a  b", "\tx\x1fy ", "one line of chat"]
+# fast rows that already equal their result, so the rewrite skips them
+UNMARKED_ROWS = ["", "a", "ab cd", "one line of chat", "x.y, z!", "A b C d e"]
 SLOW_ROWS = [None, "page 3", "a\n\nb", "<p>x</p><p>y</p>", "a\xa0b", "a\fb"]
 
 _chatty = st.lists(st.sampled_from([*_ASCII_WS, *_OTHER_WS, *"abPAGE<>#-*+1.`", "page", "<p>"]), max_size=30).map("".join)
 _rows = st.lists(st.one_of(st.none(), st.text(max_size=40), _chatty), max_size=40)
+
+
+def _plain_single_block_5pass(text: pa.Array) -> pa.Array:
+    """The row test with one pass per clause (ASCII, ``<``, newline, form
+    feed, case-insensitive ``page``): the reference ``_plain_single_block``'s
+    one-regex mask must equal."""
+    ok = pc.string_is_ascii(text)
+    for pattern in ("<", "\n", "\f"):
+        ok = pc.and_(ok, pc.invert(pc.match_substring(text, pattern)))
+    ok = pc.and_(ok, pc.invert(pc.match_substring(text, "page", ignore_case=True)))
+    return pc.fill_null(ok, False)
+
+
+def _marked(rows: list) -> list[bool]:
+    return pc.match_substring_regex(pa.array(rows, pa.string()), _WS_TO_COLLAPSE).to_pylist()
 
 
 def _via_batches(batches: list[pa.RecordBatch]) -> list[tuple]:
@@ -204,9 +229,41 @@ def test_extract_batches_equals_extract_one_on_edge_rows(size):
 @settings(max_examples=200, deadline=None)
 @given(_rows)
 def test_extract_batches_equals_extract_one(rows):
+    text = pa.array(rows, pa.string())
+    assert _plain_single_block(text).to_pylist() == _plain_single_block_5pass(text).to_pylist()
     want = _want(rows)
     for size in (1, 7, 2048):
         assert _via_batches(_batches(rows, size)) == want
+
+
+def test_guard_marks_each_trigger_alone():
+    """Each guard row (also an edge row) passes the row test and is marked
+    for the rewrite; no unmarked row needs it."""
+    assert all(_plain_single_block(pa.array(GUARD_ROWS + UNMARKED_ROWS, pa.string())).to_pylist())
+    assert _marked(GUARD_ROWS) == [True] * len(GUARD_ROWS)
+    assert _marked(UNMARKED_ROWS) == [False] * len(UNMARKED_ROWS)
+    assert [" ".join(r.split()) for r in UNMARKED_ROWS] == UNMARKED_ROWS
+
+
+_GUARD_MIXES = {
+    "none_marked": UNMARKED_ROWS * 3,
+    "all_marked": GUARD_ROWS * 2,
+    "some_marked": [r for pair in zip(GUARD_ROWS, UNMARKED_ROWS * 2) for r in pair],
+}
+
+
+@pytest.mark.parametrize("size", [1, 7, 2048])
+@pytest.mark.parametrize("with_slow", [False, True], ids=["fast_only", "with_slow"])
+@pytest.mark.parametrize("mix", sorted(_GUARD_MIXES))
+def test_extract_batches_guard_branches(mix, with_slow, size):
+    """Batches whose fast rows are all unmarked (the rewrite is skipped),
+    all marked, or some marked (the rewrite runs on those rows only), alone
+    and between per-row rows, give ``extract_one``'s results."""
+    fast = _GUARD_MIXES[mix]
+    assert any(_marked(fast)) == (mix != "none_marked")
+    assert all(_marked(fast)) == (mix == "all_marked")
+    rows = [r for pair in zip(fast, cycle(SLOW_ROWS)) for r in pair] if with_slow else fast
+    assert _via_batches(_batches(rows, size)) == _want(rows)
 
 
 @pytest.mark.parametrize("rows", [FAST_ROWS, SLOW_ROWS, []], ids=["all_fast", "all_slow", "empty"])
@@ -229,3 +286,34 @@ def test_extract_batches_fills_every_non_nullable_field(size):
     required = [f.name for f in EXTRACT_FIELDS if not f.nullable]
     for rb in extract_batches(iter(_batches(EDGE_ROWS, size))):
         assert {c: rb.column(c).null_count for c in required} == dict.fromkeys(required, 0)
+
+
+def test_large_arrow_string_types_give_the_default_rows(spark, tmp_path):
+    """Under ``spark.sql.execution.arrow.useLargeVarTypes`` the Python stage
+    gets ``text`` as ``large_string``; batches that mix Arrow-path and
+    per-row rows must still make one result column, and ``run_extract`` and
+    ``run_pipeline`` must return the default session's rows."""
+    df = synth_transcripts_df(spark, 20)
+    varying = ("partition_id", "batch_latency_ms")
+
+    def rows(out):
+        return sorted(out.select(*[c for c in out.columns if c not in varying]).collect())
+
+    def run(tag: str) -> tuple[list, list]:
+        io = ParquetManifestIO(str(tmp_path / tag))
+        run_pipeline(df, io, n_buckets=2, n_partitions=2, run_id=tag)
+        return rows(run_extract(df, n_partitions=2)), rows(io.read(spark))
+
+    key = "spark.sql.execution.arrow.useLargeVarTypes"
+    want = run("default")
+    before = spark.conf.get(key, None)
+    spark.conf.set(key, "true")
+    try:
+        got = run("large")
+    finally:
+        if before is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, before)
+    assert len(want[0]) == len(want[1]) == df.count()
+    assert got == want

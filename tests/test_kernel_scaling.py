@@ -3,9 +3,10 @@
 Each family below is markup that a truncated page or code full of `<`
 comparisons produces, and that a regex or a scan-ahead loop can turn
 quadratic: unterminated `<` runs (no `>` anywhere after them), open tags
-that never close, and comment openers without an end marker; plus one long
-line of mixed whitespace, which ``extract_batches`` extracts in Arrow
-compute instead of the kernel. Every kernel entry point, and
+that never close, and comment openers without an end marker; plus two long
+single lines that ``extract_batches`` extracts in Arrow compute instead of
+the kernel: one of mixed whitespace runs (its whitespace rewrite) and one
+of single-spaced words (no run to collapse, so the rewrite is skipped). Every kernel entry point, and
 ``extract_batches`` on a one-row batch, must take at most 6x as long on
 80 KB as on 20 KB of the same family (linear is 4x). Times are the best of several runs with the cyclic
 garbage collector off, as ``timeit`` does: a full collection walks the
@@ -41,6 +42,7 @@ FAMILIES = {
     "comment": lambda n: "<!--" * (n // 4),
     "lt_lines": lambda n: "x <b\n" * (n // 5),
     "ws_run": lambda n: "a" + " \t\x0b\r" * (n // 4) + "b",
+    "one_line": lambda n: " ".join(["ab"] * (n // 3)),
 }
 
 
